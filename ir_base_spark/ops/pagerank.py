@@ -21,19 +21,90 @@ file order — an artifact of its sequential reader, not a semantic);
 dot products round to 6 dp before ranking/softmax so the SQL oracle
 ranks and weighs identically.
 
-Scale shape: groups are bounded (per-item review sets), so pairwise
-similarity within a group is the oracle-exact baseline; at 100 TB
-swap candidate generation for the ANN path and keep everything
-downstream. Each iteration is one join of the edge list against the
-rank vector plus one per-group aggregate — codegen columns, no UDFs.
+Execution: one ``groupBy(group).applyInPandas`` numpy kernel — one
+shuffle, no joins, windows, caches or per-iteration lineage. Groups
+are bounded by contract (per-item review sets; ids unique within a
+group); at corpus scale swap in ANN candidate generation and keep the
+rest. Similarities are scored in row blocks and only each row's top-k
+survives a block, so a worker holds O(block·N + N·k), never O(N²).
+
+Exactness contract with the DataFrame/SQL form: the dot is
+``similarity._dot``'s left fold (float64 cast, ``acc += x[d]·y[d]``
+for d ascending), and ``round6`` is Spark's ``round(x, 6)`` — HALF_UP
+on the shortest decimal form, not numpy's half-even.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from decimal import ROUND_HALF_UP, Decimal
 
-from .similarity import _dot
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
+
+# similarity cells scored per row block (16 MB of float64)
+_BLOCK_ELEMS = 1 << 21
+_Q6 = Decimal("1e-6")
+
+
+def round6(x) -> np.ndarray:
+    """Spark ``round(x, 6)`` on float64, element-wise (+ 0.0: BigDecimal
+    has no negative zero)."""
+    x = np.asarray(x, np.float64)
+    # y is within ~1.5 ulp of the decimal form scaled by 1e6: values that
+    # close to a .5 boundary are rounded exactly; non-finite values and
+    # those past 2**53 (already integral) pass through
+    with np.errstate(over="ignore", invalid="ignore"):
+        y = np.abs(x) * 1e6
+        out = np.copysign(np.floor(y + 0.5), x) / 1e6 + 0.0
+        near = np.abs(y - np.floor(y) - 0.5) <= 1e-6 + y * 1e-15
+    keep = ~(np.abs(x) < 2.0**53)
+    out[keep] = x[keep]
+    for i in np.flatnonzero(near & ~keep):
+        v = Decimal(repr(float(x.flat[i]))).quantize(_Q6, ROUND_HALF_UP)
+        out.flat[i] = float(v) + 0.0
+    return out
+
+
+def _group_weights(pdf, top_k, alpha, iterations, min_size) -> pd.DataFrame:
+    """One group (g, id, vec) → (g, id, rank6, weight6)."""
+    if len(pdf) <= min_size:
+        return pd.DataFrame(columns=["g", "id", "rank6", "weight6"])
+    pdf = pdf.sort_values("id", kind="stable")  # column order == dst asc
+    X = np.stack(pdf["vec"].to_numpy()).astype(np.float64)
+    n, dim = X.shape
+    k = max(0, min(top_k, n - 1))
+    nbr = np.empty((n, k), np.int64)
+    s = np.empty((n, k))
+    step = max(1, _BLOCK_ELEMS // n)
+    for lo in range(0, n, step):
+        B = X[lo:lo + step]
+        acc = np.zeros((B.shape[0], n))
+        for d in range(dim):
+            acc += B[:, d, None] * X[None, :, d]
+        s6 = round6(acc)
+        np.fill_diagonal(s6[:, lo:], -np.inf)  # never its own neighbor
+        # stable sort of -s keeps equal similarities in dst-asc order
+        top = np.argsort(-s6, axis=1, kind="stable")[:, :k]
+        nbr[lo:lo + step] = top
+        s[lo:lo + step] = np.take_along_axis(s6, top, axis=1)
+    # softmax over each row's top-k, summed in rank order (a left fold)
+    e = np.exp(s)
+    w = (e / np.cumsum(e, axis=1)[:, -1:]).ravel()
+    src, dst = np.repeat(np.arange(n), k), nbr.ravel()
+    r = np.full(n, 1.0 / np.sqrt(n))
+    for _ in range(iterations):
+        infl = np.bincount(dst, weights=w * r[src], minlength=n)
+        r = alpha / n + (1.0 - alpha) * infl
+        r = r / np.sqrt(np.sum(r * r))
+    return pd.DataFrame({
+        "g": pdf["g"].to_numpy(),
+        "id": pdf["id"].to_numpy(),
+        "rank6": round6(r),
+        "weight6": round6(1.0 + 10.0 * r),
+    })
 
 
 def pagerank_instance_weights(
@@ -51,91 +122,16 @@ def pagerank_instance_weights(
         F.col(group_col).alias("g"),
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("vec"),
-    )
-    sizes = V.groupBy("g").agg(F.count(F.lit(1)).alias("N")).filter(
-        F.col("N") > min_group_size
-    )
-    # cached: read by both sides of the pair join, the node table and
-    # the edge build — without it the pair self-join re-derives the
-    # grouped/filtered vector table once per consumer
-    V = V.join(F.broadcast(sizes), "g").cache()
+    ).filter(F.col("g").isNotNull())  # a null group joins nothing
+    schema = StructType([
+        V.schema["g"],
+        V.schema["id"],
+        StructField("rank6", DoubleType()),
+        StructField("weight6", DoubleType()),
+    ])
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        return _group_weights(pdf, top_k, alpha, iterations, min_group_size)
 
-    pairs = (
-        V.alias("a")
-        .join(
-            V.select(
-                F.col("g"), F.col("id").alias("dst"), F.col("vec").alias("bv")
-            ).alias("b"),
-            "g",
-        )
-        .filter(F.col("id") != F.col("dst"))
-        .select(
-            "g",
-            F.col("id").alias("src"),
-            "dst",
-            F.round(_dot(F.col("vec"), F.col("bv")), 6).alias("s"),
-        )
-    )
-    w = Window.partitionBy("g", "src").orderBy(
-        F.col("s").desc(), F.col("dst").asc()
-    )
-    top = pairs.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") <= top_k
-    )
-    # softmax over each node's top-k (constructSparseGraph :83-94)
-    edges = (
-        top.withColumn("e", F.exp(F.col("s")))
-        .withColumn(
-            "w",
-            F.col("e")
-            / F.sum("e").over(Window.partitionBy("g", "src")),
-        )
-        .select("g", "src", "dst", "w")
-        .cache()
-    )
-
-    nodes = V.select("g", "id", "N")
-    r = nodes.withColumn("r", F.lit(1.0) / F.sqrt(F.col("N")))
-    for _ in range(iterations):
-        inc = (
-            edges.join(
-                r.select(
-                    "g", F.col("id").alias("src"), F.col("r").alias("rs")
-                ),
-                ["g", "src"],
-            )
-            .groupBy("g", "dst")
-            .agg(F.sum(F.col("w") * F.col("rs")).alias("infl"))
-        )
-        upd = (
-            nodes.join(
-                inc.select("g", F.col("dst").alias("id"), "infl"),
-                ["g", "id"],
-                "left",
-            )
-            .withColumn(
-                "r",
-                F.lit(alpha) / F.col("N")
-                + F.lit(1.0 - alpha) * F.coalesce(F.col("infl"), F.lit(0.0)),
-            )
-            # read twice per iteration (L2 norm + the normalized rank):
-            # cached, or the pre-norm subtree doubles per iteration
-            # (2^iterations plan blowup — 206 Exchange / 2731 lines
-            # for the 3-iteration entry before; 19 after)
-            .cache()
-        )
-        norm = upd.groupBy("g").agg(
-            F.sqrt(F.sum(F.col("r") * F.col("r"))).alias("nrm")
-        )
-        r = (
-            upd.join(F.broadcast(norm), "g")
-            .withColumn("r", F.col("r") / F.col("nrm"))
-            .select("g", "id", "N", "r")
-        )
-
-    return r.select(
-        F.col("g").alias(group_col),
-        F.col("id").alias(id_col),
-        F.round(F.col("r"), 6).alias("rank6"),
-        F.round(F.lit(1.0) + F.lit(10.0) * F.col("r"), 6).alias("weight6"),
+    return V.groupBy("g").applyInPandas(kernel, schema).toDF(
+        group_col, id_col, "rank6", "weight6"
     )
