@@ -79,7 +79,7 @@ def q_bm25_topk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_bm25_topk_docs_wand(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same ranking through the compressed-block + block-max WAND path."""
+    """Same ranking through the compressed-block TAAT path."""
     from ir_base_spark.index.blocks import build_block_index
     from ir_base_spark.index.build import build_index
     from ir_base_spark.index.dictionary import assign_doc_ids

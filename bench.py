@@ -8,7 +8,8 @@ Runs the headline suite at $SPARK_GRAFT_SF_DIR (default
   (deterministic, cached in /tmp across runs; generation time excluded)
 - index_finalize: dictionary + corpus stats + BM25 weights
 - block_build: doc-id map + compressed posting blocks
-- wand_queries: the 100-query reference set through block-max WAND
+- wand_queries: the 100-query reference set through the sharded block
+  index (the TAAT kernel)
 - m1_queries: same set through the pure-DataFrame scoring path
 - plus the headline __spark_entry__ queries on the sf tables, each
   forced end-to-end with a noop sink.
@@ -133,16 +134,10 @@ def run_index_bench(spark, n_conversations: int, queries_n: int = 100) -> dict:
     qt.count()
 
     t0 = time.time()
-    wand_topk_sharded(spark, root, qt, algo="wand").write.format("noop").mode(
+    wand_topk_sharded(spark, root, qt).write.format("noop").mode(
         "overwrite"
     ).save()
     out["wand_queries"] = round(time.time() - t0, 3)
-
-    t0 = time.time()
-    wand_topk_sharded(spark, root, qt, algo="taat").write.format("noop").mode(
-        "overwrite"
-    ).save()
-    out["taat_queries"] = round(time.time() - t0, 3)
 
     t0 = time.time()
     topk_search(idx, qt).write.format("noop").mode("overwrite").save()

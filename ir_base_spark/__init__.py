@@ -4,8 +4,8 @@ A from-scratch Spark-first re-expression of the capabilities of the
 reference IR codebase (mikelatch/IR_Base, surveyed in SURVEY.md): text
 analysis (tokenize/normalize/Porter2-stem/n-gram), exact corpus
 statistics, BM25/TFIDF weighting, inverted-index construction with
-delta-gap + varbyte compressed posting blocks and per-block max-score,
-block-max WAND top-k retrieval, resumable index builds with per-partition
+delta-gap + varbyte compressed posting blocks, exact vectorized
+term-at-a-time top-k retrieval, resumable index builds with per-partition
 manifests, and a library of large-scale text-pipeline operators
 (dedup, similarity search, text stats) over plain DataFrames.
 """

@@ -13,7 +13,8 @@ engine instead stores term-major posting blocks:
   Python in the build hot path);
 - weights stay float64 (rank identity forbids quantization); stored as
   raw little-endian bytes;
-- ``max_weight`` per block drives block-max WAND pruning (query/wand.py).
+- ``max_weight`` per block is kept in the format; the query kernel
+  (query/wand.py) scores exhaustively and does not read it.
 
 Hot-term skew (SURVEY §4, §7.3): the build groups by (term_id, bucket)
 where bucket = doc_id >> bucket_bits — a *doc-range* salt. A Zipf-head

@@ -1,388 +1,38 @@
-"""Block-max WAND top-k over the compressed block index.
+"""Top-k BM25 over the compressed block index: one exact vectorized
+term-at-a-time (TAAT) kernel.
 
-The scale query path (SURVEY §7.1 step 6): document-space-sharded WAND.
-Matched blocks shuffle ONCE per doc-range bucket (deduplicated on the
-query set's distinct term_ids — block bytes are never duplicated per
-query); each bucket kernel then runs EVERY query over its blocks with a
-shared per-bucket block-decode cache and an independent bounded heap per
-query. A tiny global merge (<= k rows per query per bucket) takes the
-final top-k. Candidate generation, pruning, and scoring never leave the
-executor.
+The scale query path (SURVEY §7.1 step 6) is document-space sharded.
+Each kernel call gets one doc-range bucket (one shard file on disk, or
+one ``bucket`` group of the in-memory index) with the matched terms'
+blocks, decodes each term's block run once in one vectorized pass, and
+runs EVERY query of the batch over it. It emits <= k rows per
+(query, bucket); a bounded per-query rank window takes the final top-k.
 
-Correctness contract (rank identity with oracle + M1 path):
-- full evaluation accumulates qw·w in ascending term_id order (canonical
-  float order, SURVEY §7.3);
-- the bounded heap orders by (score, -doc_id): first-out is lowest score,
-  then largest doc_id — so ties keep the smallest (conv_id, turn_idx),
-  the MyPriorityQueue contract
-  (/root/reference/src/structures/MyPriorityQueue.java:40-52);
-- upper bounds are clamped at 0 (BM25 IDF goes negative when
-  DF > N/2, and a negative addend would break WAND's prefix-sum
-  pruning argument);
-- prune comparisons are tie-conservative (skip only when strictly below
-  the threshold) so score-equal docs that win by doc-id tie-break are
-  never pruned.
+The exactness contract is two rules, the same two ``oracle.search``
+follows, so results are rank-identical to the oracle and the M1
+DataFrame path:
+
+- per doc, contributions qw·w accumulate in ascending term_id order
+  (canonical float order, SURVEY §7.3): each vectorized
+  ``acc[idx] += qw*w`` pass is one term's addend, and the terms are
+  visited sorted;
+- ranking is (score desc, doc_id asc): score ties keep the smallest
+  (conv_id, turn_idx), the MyPriorityQueue contract
+  (/root/reference/src/structures/MyPriorityQueue.java:40-52).
+
+There is no pruning: every posting of every matched term is scored, so
+no upper bound, skip or threshold has to stay sound. The per-block
+``max_weight`` column is not read.
 """
 
 from __future__ import annotations
-
-import heapq
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..index.blocks import (
-    BlockIndex,
-    decode_postings_block,
-    decode_postings_run,
-)
-
-_INF = np.iinfo(np.int64).max
-
-
-class _ListIter:
-    """Posting-list cursor over one term's blocks within one bucket.
-
-    Blocks decode lazily: ``next_geq`` skips whole blocks on
-    (first_doc, last_doc) metadata before touching payload bytes.
-    """
-
-    __slots__ = (
-        "term_id", "qw", "firsts", "lasts", "maxws", "gaps", "wbytes",
-        "meta", "bi", "ids", "ws", "pos", "cur", "ub", "cache",
-    )
-
-    def __init__(self, term_id, qw, firsts, lasts, maxws, gaps, wbytes,
-                 meta=None, cache=None):
-        self.meta = meta
-        self.term_id = term_id
-        self.qw = qw
-        self.cache = cache
-        self.firsts = firsts
-        self.lasts = lasts
-        self.maxws = maxws
-        self.gaps = gaps
-        self.wbytes = wbytes
-        self.bi = 0
-        self.ids = None
-        self.ws = None
-        self.pos = 0
-        # term-level upper bound within this bucket, clamped at 0
-        self.ub = max(0.0, qw * max(maxws))
-        self._open_block()
-
-    def _open_block(self):
-        if self.bi >= len(self.firsts):
-            self.cur = _INF
-            return
-        if self.cache is not None:
-            key = (self.term_id, self.bi)
-            hit = self.cache.get(key)
-            if hit is None:
-                hit = decode_postings_block(
-                    self.firsts[self.bi], self.gaps[self.bi],
-                    self.wbytes[self.bi], self.meta,
-                )
-                self.cache[key] = hit
-            self.ids, self.ws = hit
-        else:
-            self.ids, self.ws = decode_postings_block(
-                self.firsts[self.bi], self.gaps[self.bi],
-                self.wbytes[self.bi], self.meta,
-            )
-        self.pos = 0
-        self.cur = int(self.ids[0])
-
-    def block_max_geq(self, target: int) -> float:
-        """Shallow move: per-block max for the block that would contain
-        ``target`` (no decode). Clamped at 0."""
-        bi = self.bi
-        while bi < len(self.lasts) and self.lasts[bi] < target:
-            bi += 1
-        if bi >= len(self.lasts):
-            return 0.0
-        return max(0.0, self.qw * self.maxws[bi])
-
-    def block_last(self, target: int) -> int:
-        """last_doc of the block that would contain target (for BMW
-        skip-to-boundary moves)."""
-        bi = self.bi
-        while bi < len(self.lasts) and self.lasts[bi] < target:
-            bi += 1
-        if bi >= len(self.lasts):
-            return _INF
-        return int(self.lasts[bi])
-
-    def next_geq(self, target: int):
-        if self.cur >= target:
-            return
-        while self.bi < len(self.lasts) and self.lasts[self.bi] < target:
-            self.bi += 1
-            self.ids = None
-        if self.bi >= len(self.lasts):
-            self.cur = _INF
-            return
-        if self.ids is None:
-            self._open_block()
-        self.pos = int(np.searchsorted(self.ids, target, side="left"))
-        if self.pos >= len(self.ids):
-            # target fell in a gap right after this block's last id
-            self.bi += 1
-            self.ids = None
-            if self.bi >= len(self.lasts):
-                self.cur = _INF
-                return
-            self._open_block()
-        else:
-            self.cur = int(self.ids[self.pos])
-
-    def advance(self):
-        self.pos += 1
-        if self.pos < len(self.ids):
-            self.cur = int(self.ids[self.pos])
-        else:
-            self.bi += 1
-            self.ids = None
-            if self.bi >= len(self.lasts):
-                self.cur = _INF
-            else:
-                self._open_block()
-
-    def weight_at_cur(self) -> float:
-        return float(self.ws[self.pos])
-
-
-def _wand_bucket(lists: list[_ListIter], k: int) -> list[tuple[int, float]]:
-    """Block-max WAND over one bucket; returns [(doc_id, score)] top-k."""
-    heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap
-    by_tid = sorted(lists, key=lambda x: x.term_id)
-
-    while True:
-        live = [x for x in by_tid if x.cur != _INF]
-        if not live:
-            break
-        live.sort(key=lambda x: x.cur)
-        full = len(heap) >= k
-        # pivot selection on clamped term UBs; tie-conservative (>=):
-        # a doc scoring exactly theta can still enter by doc-id tie-break
-        acc = 0.0
-        pivot = -1
-        for i, L in enumerate(live):
-            acc += L.ub
-            if not full or acc >= heap[0][0]:
-                pivot = i
-                break
-        if pivot == -1:
-            break
-        pivot_doc = live[pivot].cur
-        if live[0].cur == pivot_doc:
-            # edge = last list whose cursor sits on pivot_doc — lists past
-            # the pivot can also hold pivot_doc and contribute to it, so
-            # both the bound and the skip must cover them
-            edge = pivot
-            while edge + 1 < len(live) and live[edge + 1].cur == pivot_doc:
-                edge += 1
-            # block-max validation (shallow, no decode)
-            if full:
-                bm = 0.0
-                for L in live[: edge + 1]:
-                    bm += L.block_max_geq(pivot_doc)
-                if bm < heap[0][0]:
-                    # BMW skip: past the nearest block boundary, but never
-                    # past the first cursor beyond the edge — docs in
-                    # (pivot_doc, boundary] may score from later lists too
-                    boundary = min(L.block_last(pivot_doc) for L in live[: edge + 1])
-                    target = boundary + 1 if boundary != _INF else _INF
-                    if edge + 1 < len(live):
-                        target = min(target, live[edge + 1].cur)
-                    if target <= pivot_doc:
-                        target = pivot_doc + 1
-                    for L in live[: edge + 1]:
-                        L.next_geq(target)
-                    continue
-            # full evaluation in ascending term_id order
-            score = 0.0
-            for L in by_tid:
-                if L.cur == pivot_doc:
-                    score += L.qw * L.weight_at_cur()
-            item = (score, -pivot_doc)
-            if len(heap) < k:
-                heapq.heappush(heap, item)
-            elif item > heap[0]:
-                heapq.heapreplace(heap, item)
-            for L in by_tid:
-                if L.cur == pivot_doc:
-                    L.advance()
-        else:
-            # advance all lists before the pivot up to pivot_doc
-            for L in live[:pivot]:
-                L.next_geq(pivot_doc)
-    out = [(-nd, s) for s, nd in heap]
-    out.sort(key=lambda t: (-t[1], t[0]))
-    return out
-
-
-def _bmw_query(
-    lists: list[tuple],
-    k: int,
-    cache: dict,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Exact top-k for ONE query via VECTORIZED block-max WAND.
-
-    ``lists`` = [(term_id, qw, firsts, lasts, maxws, gaps, wbytes,
-    meta, ub)] in ascending term_id. Replaces the per-posting cursor
-    kernel (`_wand_bucket`, retained as the fuzz-tested reference
-    implementation under ``algo="cursor"``) with a window-at-a-time
-    numpy formulation that keeps BOTH of block-max WAND's pruning
-    levers while doing O(#blocks), not O(#postings), Python work:
-
-    - essential-list selection (MaxScore): the non-essential prefix of
-      UB-sorted lists whose clamped-UB prefix sum is <= θ contributes
-      no candidates — a doc found only there scores <= θ and loses the
-      doc-id tie-break to the (earlier, doc-ordered) incumbent;
-    - true block-max skipping: each window is [cur, nearest essential
-      block boundary]; if the sum over ALL lists of their max block
-      score overlapping the window is strictly below θ, the window is
-      skipped without decoding a single payload byte.
-
-    Windows advance in doc order, candidates are scored exactly with
-    one searchsorted gather per term in ascending term_id order (the
-    canonical float accumulation order shared by M1/TAAT/MaxScore/
-    cursor), and blocks decode lazily through the shared per-bucket
-    ``cache`` keyed (term_id, block_idx) so a batch of queries decodes
-    each block at most once.
-    """
-    nt = len(lists)
-    ubs = np.array([L[8] for L in lists])
-    by_ub = sorted(range(nt), key=lambda i: (ubs[i], i))
-    prefix_ub = np.cumsum(ubs[by_ub])
-    pool_docs = np.empty(0, dtype=np.int64)
-    pool_scores = np.empty(0, dtype=np.float64)
-    theta = -np.inf
-    full = False
-    cur = min(int(L[2][0]) for L in lists)
-
-    def _decoded(i: int, bi: int):
-        L = lists[i]
-        key = (L[0], bi)
-        hit = cache.get(key)
-        if hit is None:
-            hit = decode_postings_block(L[2][bi], L[5][bi], L[6][bi], L[7])
-            cache[key] = hit
-        return hit
-
-    def _overlap(i: int, lo: int, hi: int) -> tuple[int, int]:
-        """Block index range [b_lo, b_hi) overlapping doc range [lo, hi]."""
-        L = lists[i]
-        b_lo = int(np.searchsorted(L[3], lo, side="left"))
-        b_hi = int(np.searchsorted(L[2], hi, side="right"))
-        return b_lo, b_hi
-
-    while True:
-        ne = (
-            int(np.searchsorted(prefix_ub, theta, side="right")) if full else 0
-        )
-        # nearest essential block boundary >= cur defines the window
-        window_end = None
-        for i in by_ub[ne:]:
-            lasts = lists[i][3]
-            b = int(np.searchsorted(lasts, cur, side="left"))
-            if b < len(lasts):
-                le = int(lasts[b])
-                if window_end is None or le < window_end:
-                    window_end = le
-        if window_end is None:
-            break
-        if full:
-            # shallow block-max validation over ALL lists, no decode
-            bm = 0.0
-            for i in range(nt):
-                b_lo, b_hi = _overlap(i, cur, window_end)
-                if b_hi > b_lo:
-                    m = float(lists[i][4][b_lo:b_hi].max())
-                    v = lists[i][1] * m
-                    if v > 0.0:
-                        bm += v
-            if bm < theta:  # tie-conservative: skip only strictly below
-                cur = window_end + 1
-                continue
-        # candidates: essential-list postings within the window
-        parts = []
-        for i in by_ub[ne:]:
-            b_lo, b_hi = _overlap(i, cur, window_end)
-            for b in range(b_lo, b_hi):
-                ids, _ws = _decoded(i, b)
-                s = int(np.searchsorted(ids, cur, side="left"))
-                e = int(np.searchsorted(ids, window_end, side="right"))
-                if e > s:
-                    parts.append(ids[s:e])
-        if not parts:
-            cur = window_end + 1
-            continue
-        cand = np.unique(np.concatenate(parts)) if len(parts) > 1 else np.unique(parts[0])
-        # exact scores: ascending term_id accumulation (canonical order)
-        acc = np.zeros(cand.shape[0], dtype=np.float64)
-        for i in range(nt):
-            b_lo, b_hi = _overlap(i, cur, window_end)
-            if b_hi <= b_lo:
-                continue
-            blocks = [_decoded(i, b) for b in range(b_lo, b_hi)]
-            if len(blocks) == 1:
-                ids, ws = blocks[0]
-            else:
-                ids = np.concatenate([b[0] for b in blocks])
-                ws = np.concatenate([b[1] for b in blocks])
-            idx = np.searchsorted(ids, cand)
-            idx_c = np.minimum(idx, len(ids) - 1)
-            match = ids[idx_c] == cand
-            if match.any():
-                acc[match] += lists[i][1] * ws[idx_c[match]]
-        pool_docs = np.concatenate([pool_docs, cand])
-        pool_scores = np.concatenate([pool_scores, acc])
-        if pool_docs.shape[0] >= k:
-            if pool_docs.shape[0] > k:
-                order = np.lexsort((pool_docs, -pool_scores))[:k]
-                pool_docs = pool_docs[order]
-                pool_scores = pool_scores[order]
-            theta = float(pool_scores.min())
-            full = True
-        cur = window_end + 1
-    return pool_docs, pool_scores
-
-
-def _bmw_bucket(
-    arrays: dict[int, tuple],
-    queries: list[tuple[str, int, list[tuple[int, float]]]],
-    out: dict,
-) -> None:
-    """Vectorized block-max WAND batch scorer over one bucket — the
-    default selective path (algo="wand"). Rank-identical to the cursor
-    reference kernel, TAAT, MaxScore and M1 (same accumulation order,
-    same (score desc, doc asc) tie-break, tie-conservative pruning);
-    shares one (term_id, block) decode cache across the whole batch."""
-    cache: dict = {}
-    for query_id, k, terms in queries:
-        lists = []
-        for tid, qw in terms:  # already ascending term_id
-            arr = arrays.get(tid)
-            if arr is None:
-                continue
-            firsts, lasts, maxws, gaps, wbytes, meta = arr
-            ub = max(0.0, qw * float(maxws.max()))
-            lists.append((tid, qw, firsts, lasts, maxws, gaps, wbytes, meta, ub))
-        if not lists:
-            continue
-        docs, scores = _bmw_query(lists, k, cache)
-        if docs.shape[0] == 0:
-            continue
-        order = np.lexsort((docs, -scores))[:k]
-        for i in order:
-            out["query_id"].append(query_id)
-            out["doc_id"].append(int(docs[i]))
-            out["score"].append(float(scores[i]))
-            out["k"].append(k)
+from ..index.blocks import BlockIndex, decode_postings_run
 
 
 def _taat_bucket(
@@ -390,22 +40,18 @@ def _taat_bucket(
     queries: list[tuple[str, int, list[tuple[int, float]]]],
     out: dict,
 ) -> None:
-    """Vectorized term-at-a-time scorer over one bucket's decoded lists.
+    """Score every query over one bucket's block runs; append each
+    query's top-k rows to ``out``.
 
-    Exact (no pruning) and rank-identical to WAND/M1: contributions
-    accumulate in ascending term_id order per doc (each vectorized
-    ``acc[idx] += qw*w`` pass IS one term's addend, and terms are
-    visited sorted), and top-k selection uses the same
-    (score desc, doc_id asc) tie-break. A dense accumulator spans only
-    the bucket's local doc range (bounded by the doc-shard width), so
-    memory is O(bucket), never O(corpus). ~100x less Python-interpreter
-    work than DAAT WAND for large query batches — the batch path; WAND
-    remains the selective/interactive path (it decodes fewer blocks).
+    ``arrays`` maps term_id → (firsts, lasts, gaps, payloads, meta) of
+    that term's blocks in block order. A dense accumulator spans only
+    the bucket's doc range (bounded by the doc-shard width), so memory
+    is O(bucket), never O(corpus), and is reused across queries.
     """
     decoded: dict[int, tuple[np.ndarray, np.ndarray]] = {}
     lo = None
     hi = None
-    for tid, (firsts, lasts, maxws, gaps, wbytes, meta) in arrays.items():
+    for tid, (firsts, lasts, gaps, wbytes, meta) in arrays.items():
         ids, ws = decode_postings_run(firsts, lasts, gaps, wbytes, meta)
         decoded[tid] = (ids, ws)
         tlo = int(ids[0])
@@ -451,141 +97,9 @@ def _taat_bucket(
             out["k"].append(k)
 
 
-def _decode_full_lists(arrays: dict[int, tuple], tids, cache: dict):
-    """Concatenated (ids, ws) per term with a shard-level cache — each
-    term's blocks decode ONCE per shard no matter how many queries in
-    the batch touch it."""
-    out = {}
-    for tid in tids:
-        hit = cache.get(tid)
-        if hit is None:
-            firsts, lasts, maxws, gaps, wbytes, meta = arrays[tid]
-            hit = decode_postings_run(firsts, lasts, gaps, wbytes, meta)
-            cache[tid] = hit
-        out[tid] = hit
-    return out
-
-
-def _maxscore_query(
-    lists: list[tuple[int, float, np.ndarray, np.ndarray, float]],
-    k: int,
-    chunk: int = 4096,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Exact top-k for ONE query over decoded lists via chunked MaxScore.
-
-    ``lists`` = [(term_id, qw, ids, ws, ub)] in ascending term_id. The
-    candidate stream is the doc-ordered union of the ESSENTIAL lists
-    only — the non-essential prefix (smallest clamped upper bounds whose
-    sum is <= the current threshold θ) cannot lift any doc above θ, and
-    a doc tying θ exactly loses the doc-id tie-break to the (earlier,
-    smaller-id) incumbent, so exclusion is exact, not approximate.
-    Candidates are exactly scored VECTORIZED per chunk: one searchsorted
-    gather per term in ascending term_id order, so per-element float
-    accumulation order matches the scalar WAND/TAAT/M1 paths. θ only
-    grows, so the non-essential prefix only widens. ~block_size× less
-    Python-interpreter work than the cursor DAAT kernel on batch loads.
-
-    Returns (doc_ids, scores) of the final pool, unordered beyond the
-    pool invariant (caller ranks).
-    """
-    nt = len(lists)
-    ubs = np.array([ub for _, _, _, _, ub in lists])
-    by_ub = sorted(range(nt), key=lambda i: (ubs[i], i))
-    prefix_ub = np.cumsum(ubs[by_ub])
-    ptrs = [0] * nt
-    pool_docs = np.empty(0, dtype=np.int64)
-    pool_scores = np.empty(0, dtype=np.float64)
-    theta = -np.inf
-    full = False
-
-    while True:
-        ne = (
-            int(np.searchsorted(prefix_ub, theta, side="right")) if full else 0
-        )
-        essential = [
-            i for i in by_ub[ne:] if ptrs[i] < len(lists[i][2])
-        ]
-        if not essential:
-            break
-        # chunk upper doc bound: each essential list advances <= chunk
-        d_hi = min(
-            int(lists[i][2][min(ptrs[i] + chunk, len(lists[i][2])) - 1])
-            for i in essential
-        )
-        parts = []
-        for i in essential:
-            ids = lists[i][2]
-            j = int(np.searchsorted(ids, d_hi, side="right"))
-            if j > ptrs[i]:
-                parts.append(ids[ptrs[i]: j])
-                ptrs[i] = j
-        if not parts:
-            break
-        cand = np.unique(np.concatenate(parts)) if len(parts) > 1 else parts[0]
-        # exact scores, ascending term_id accumulation (canonical order)
-        acc = np.zeros(cand.shape[0], dtype=np.float64)
-        for tid, qw, ids, ws, _ub in lists:
-            idx = np.searchsorted(ids, cand)
-            idx_c = np.minimum(idx, len(ids) - 1)
-            match = ids[idx_c] == cand
-            if match.any():
-                acc[match] += qw * ws[idx_c[match]]
-        pool_docs = np.concatenate([pool_docs, cand])
-        pool_scores = np.concatenate([pool_scores, acc])
-        if pool_docs.shape[0] >= k:
-            if pool_docs.shape[0] > k:
-                order = np.lexsort((pool_docs, -pool_scores))[:k]
-                pool_docs = pool_docs[order]
-                pool_scores = pool_scores[order]
-            theta = float(pool_scores.min())
-            full = True
-    return pool_docs, pool_scores
-
-
-def _maxscore_bucket(
-    arrays: dict[int, tuple],
-    queries: list[tuple[str, int, list[tuple[int, float]]]],
-    out: dict,
-) -> None:
-    """Chunked-MaxScore batch scorer over one bucket — the vectorized
-    selective batch path (algo="maxscore"). Rank-identical to WAND/TAAT
-    (same accumulation order, same (score desc, doc asc) tie-break,
-    tie-conservative pruning)."""
-    cache: dict = {}
-    for query_id, k, terms in queries:
-        matched = [(tid, qw) for tid, qw in terms if tid in arrays]
-        if not matched:
-            continue
-        decoded = _decode_full_lists(arrays, [t for t, _ in matched], cache)
-        lists = []
-        for tid, qw in matched:  # already ascending term_id
-            ids, ws = decoded[tid]
-            maxws = arrays[tid][2]
-            ub = max(0.0, qw * float(maxws.max()))
-            lists.append((tid, qw, ids, ws, ub))
-        docs, scores = _maxscore_query(lists, k)
-        if docs.shape[0] == 0:
-            continue
-        order = np.lexsort((docs, -scores))[:k]
-        for i in order:
-            out["query_id"].append(query_id)
-            out["doc_id"].append(int(docs[i]))
-            out["score"].append(float(scores[i]))
-            out["k"].append(k)
-
-
-def _make_bucket_kernel(
-    queries: list[tuple[str, int, list[tuple[int, float]]]],
-    algo: str = "wand",
-):
-    """Kernel factory: one group per BUCKET; every query runs over the
-    bucket's blocks. algo="wand": vectorized block-max WAND (selective
-    queries skip whole blocks without decoding, O(#blocks) Python
-    work); algo="taat": vectorized term-at-a-time full evaluation
-    (large batches — decode once, no per-posting Python);
-    algo="maxscore": chunked essential-list pruning; algo="cursor":
-    the per-posting DAAT reference kernel (fuzz-tested baseline, not a
-    production route). All are rank-identical."""
+def _make_bucket_kernel(queries: list[tuple[str, int, list[tuple[int, float]]]]):
+    """Kernel factory: one call per BUCKET of block rows; every query
+    runs over the bucket's blocks."""
 
     def kernel(pdf: pd.DataFrame, meta_for=None) -> pd.DataFrame:
         arrays: dict[int, tuple] = {}
@@ -594,35 +108,12 @@ def _make_bucket_kernel(
             arrays[int(term_id)] = (
                 g["first_doc"].to_numpy(dtype=np.int64),
                 g["last_doc"].to_numpy(dtype=np.int64),
-                g["max_weight"].to_numpy(dtype=np.float64),
                 g["doc_gaps"].tolist(),
                 g["weights"].tolist(),
                 meta_for(int(term_id)) if meta_for is not None else None,
             )
         out = {"query_id": [], "doc_id": [], "score": [], "k": []}
-        if algo == "wand":
-            _bmw_bucket(arrays, queries, out)
-            return pd.DataFrame(out)
-        if algo == "taat":
-            _taat_bucket(arrays, queries, out)
-            return pd.DataFrame(out)
-        if algo == "maxscore":
-            _maxscore_bucket(arrays, queries, out)
-            return pd.DataFrame(out)
-        cache: dict = {}
-        for query_id, k, terms in queries:
-            lists = [
-                _ListIter(tid, qw, *arrays[tid], cache=cache)
-                for tid, qw in terms
-                if tid in arrays
-            ]
-            if not lists:
-                continue
-            for doc_id, score in _wand_bucket(lists, k):
-                out["query_id"].append(query_id)
-                out["doc_id"].append(doc_id)
-                out["score"].append(score)
-                out["k"].append(k)
+        _taat_bucket(arrays, queries, out)
         return pd.DataFrame(out)
 
     return kernel
@@ -652,40 +143,33 @@ def wand_topk_sharded(
     spark,
     index_root: str,
     query_terms: DataFrame,
-    terms: DataFrame | None = None,
-    docs: DataFrame | None = None,
-    algo: str = "wand",
+    algo: str = "auto",
 ) -> DataFrame:
-    """Block-max WAND over the doc-sharded on-disk block index
-    (blocks.encode_shards layout) — the production batch-query path.
+    """Top-k over the doc-sharded on-disk block index (blocks.encode_shards
+    layout) — the production batch and interactive query path.
 
-    Each task gets one shard PATH; the kernel reads only the matched
-    terms' blocks via a pyarrow ``term_id in (...)`` predicate (block
-    files are term-sorted with small row groups, so row-group statistics
-    prune most of the file), then runs every query over the shard with
-    the shared decode cache. Matched block bytes never shuffle and never
-    cross the JVM→Python socket: the only rows Spark moves are <= k
-    results per (query, shard). The doc_id → (conv_id, turn_idx) label
-    is resolved IN-KERNEL by a searchsorted against the worker-cached
+    Each task gets a slice of shard PATHS; the kernel reads only the
+    matched terms' blocks via a pyarrow ``term_id in (...)`` predicate
+    (block files are term-sorted with small row groups, so row-group
+    statistics prune most of the file), then runs every query over the
+    shard. Matched block bytes never shuffle and never cross the
+    JVM→Python socket: the only rows Spark moves are <= k results per
+    (query, shard). The doc_id → (conv_id, turn_idx) label is resolved
+    IN-KERNEL by a searchsorted against the worker-cached
     conversation-base sidecar (doc_id = base[conv] + turn by
-    construction) — the old final join against the full turn-level docs
-    table rescanned 10^N rows per batch to label <= k·|queries| results,
-    a fixed cost that dominated small-batch latency and killed query
-    scaling. The final merge is just the bounded per-query rank window.
+    construction), so no join against the turn-level docs table runs per
+    batch. The final merge is just the bounded per-query rank window.
+
+    ``algo`` accepts only ``"auto"``: there is one scoring kernel.
     """
     import glob as _glob
     import os as _os
 
-    if docs is not None:
-        import warnings
-
-        warnings.warn(
-            "wand_topk_sharded ignores the `docs` argument: result labels "
-            "are resolved in-kernel from the index's base/ sidecar, not "
-            "from a caller-supplied docs mapping. Drop the argument, or "
-            "join your mapping onto the returned (conv_id, turn_idx) "
-            "frame if you need a filtered/custom labeling.",
-            stacklevel=2,
+    if algo != "auto":
+        raise ValueError(
+            f"algo={algo!r}: the 'wand', 'taat', 'maxscore' and 'cursor' "
+            "kernels were removed; the one scorer is the exact "
+            "vectorized term-at-a-time kernel, algo='auto'"
         )
     if not _os.path.isdir(_os.path.join(index_root, "base")):
         raise FileNotFoundError(
@@ -694,8 +178,7 @@ def wand_topk_sharded(
             "finalize_sharded (or finalize_index) to write the "
             "conversation-base sidecar."
         )
-    if terms is None:
-        terms = spark.read.parquet(_os.path.join(index_root, "terms"))
+    terms = spark.read.parquet(_os.path.join(index_root, "terms"))
     queries, term_ids = _prepare_queries(terms, query_terms)
     if not queries:
         return spark.createDataFrame(
@@ -735,14 +218,7 @@ def wand_topk_sharded(
         ),
         "path string",
     )
-    if algo == "auto":
-        # DAAT block-max WAND wins when pruning can skip most blocks
-        # (few selective queries, cursor kernel decodes lazily); a batch
-        # amortizes decode across queries, so the vectorized chunked-
-        # MaxScore pass wins by interpreter cost while still pruning
-        # the low-impact (stopword-heavy) lists TAAT would fully score
-        algo = "maxscore" if len(queries) >= 16 else "wand"
-    bucket_kernel = _make_bucket_kernel(queries, algo=algo)
+    bucket_kernel = _make_bucket_kernel(queries)
     tid_list = list(term_ids)
 
     def shard_kernel(batches):
@@ -827,7 +303,7 @@ def wand_topk_sharded(
 
 def wand_topk(index: BlockIndex, query_terms: DataFrame) -> DataFrame:
     """query_terms(query_id, term, qw, k) → (query_id, rank, conv_id,
-    turn_idx, score): the block-max WAND retrieval plan.
+    turn_idx, score) over the in-memory block index.
 
     The query set is small by contract (it rides to every kernel in the
     UDF closure); block bytes shuffle once per bucket, deduplicated on

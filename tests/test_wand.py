@@ -1,6 +1,8 @@
-"""Block index + block-max WAND: rank identity vs oracle and M1 path."""
+"""Block index + TAAT top-k: rank identity vs oracle and M1 path."""
 
 from __future__ import annotations
+
+import pytest
 
 from ir_base_spark.index.blocks import build_block_index
 from ir_base_spark.index.build import build_index
@@ -88,33 +90,33 @@ def test_sharded_pipeline_rank_identity(spark, fixture_small, tmp_path):
     _compare(got, expected)
 
 
-def test_taat_matches_wand_sharded(spark, fixture_small, tmp_path):
-    """The vectorized TAAT batch kernel is rank- AND score-identical to
-    DAAT block-max WAND over the same sharded index."""
+def test_sharded_batch_and_single_query_match_oracle(spark, fixture_small, tmp_path):
+    """The one scoring kernel is rank-identical to the oracle for a
+    batch and for a single interactive request; the removed kernels'
+    ``algo`` values are refused."""
     from ir_base_spark.index.blocks import encode_shards
     from ir_base_spark.index.manifest import finalize_sharded, resumable_build
     from ir_base_spark.query.wand import wand_topk_sharded
 
     t = fixture_small.transcripts
     q = fixture_small.queries
+    assert len(q) >= 16
+    oracle_idx = build_oracle_index(_oracle_docs(t))
     root = str(tmp_path / "taat")
     resumable_build(spark, spark.createDataFrame(t), root, num_partitions=4)
     finalize_sharded(spark, root)
     encode_shards(spark, root, block_size=16)
-    qt = analyze_query_terms(spark, q)
 
-    wd = {(r["query_id"], r["rank"]): (r["conv_id"], r["turn_idx"], r["score"])
-          for r in wand_topk_sharded(spark, root, qt, algo="wand").collect()}
-    ta = {(r["query_id"], r["rank"]): (r["conv_id"], r["turn_idx"], r["score"])
-          for r in wand_topk_sharded(spark, root, qt, algo="taat").collect()}
-    ms = {(r["query_id"], r["rank"]): (r["conv_id"], r["turn_idx"], r["score"])
-          for r in wand_topk_sharded(spark, root, qt, algo="maxscore").collect()}
-    assert set(wd) == set(ta) == set(ms)
-    for key in wd:
-        assert wd[key][:2] == ta[key][:2], key
-        assert abs(wd[key][2] - ta[key][2]) < 1e-12, key
-        assert wd[key][:2] == ms[key][:2], key
-        assert abs(wd[key][2] - ms[key][2]) < 1e-12, key
+    for batch in (q, q.head(1)):
+        expected = search_all(
+            oracle_idx, list(zip(batch["query_id"], batch["query_text"], batch["k"]))
+        )
+        qt = analyze_query_terms(spark, batch)
+        _compare(wand_topk_sharded(spark, root, qt).collect(), expected)
+
+    for algo in ("wand", "taat", "maxscore", "cursor"):
+        with pytest.raises(ValueError, match="removed"):
+            wand_topk_sharded(spark, root, qt, algo=algo)
 
 
 def test_direct_postings_blocks_identical(spark, fixture_small, tmp_path):

@@ -1,156 +1,98 @@
-"""Property fuzz of the pure-Python WAND kernel vs brute force.
+"""Seeded fuzz of the TAAT bucket kernel vs a brute-force dict scorer.
 
-Catches pruning-soundness bugs (e.g. under-counted block-max bounds)
-without Spark in the loop. Negative weights are included deliberately:
-BM25 IDF goes negative for DF > N/2 and the kernel's UB clamping must
-stay sound.
+Inputs go through ``encode_postings_block``, so multi-block runs are
+stitched by ``decode_postings_run`` exactly as on the query path. The
+trials cover block sizes 2–9, negative weights, k above the candidate
+count, query terms absent from the bucket, queries with no matched
+term, several queries per call (accumulator reuse) and integer-valued
+weights, whose exact score ties at the k boundary pin the smallest-doc
+re-selection after ``argpartition``.
 """
 
 from __future__ import annotations
 
+from collections import Counter
+
 import numpy as np
 
 from ir_base_spark.index.blocks import encode_postings_block
-from ir_base_spark.query.wand import _ListIter, _wand_bucket
+from ir_base_spark.query.wand import _taat_bucket
 
 
-def _run_trial(rng) -> None:
+def _encode_run(ids: np.ndarray, ws: np.ndarray, block_size: int) -> tuple:
+    blocks = [
+        encode_postings_block(ids[off: off + block_size], ws[off: off + block_size])
+        for off in range(0, len(ids), block_size)
+    ]
+    firsts, lasts, _maxws, gaps, payloads = zip(*blocks)
+    return (
+        np.array(firsts, dtype=np.int64),
+        np.array(lasts, dtype=np.int64),
+        list(gaps),
+        list(payloads),
+        None,
+    )
+
+
+def _run_trial(rng, hit: Counter) -> None:
     n_docs = int(rng.integers(5, 300))
+    base = int(rng.integers(0, 10_000))  # bucket doc range need not start at 0
     n_terms = int(rng.integers(1, 7))
-    k = int(rng.integers(1, 15))
     block_size = int(rng.integers(2, 10))
-    lists = []
-    truth: dict[int, float] = {}
-    for tid in range(n_terms):
+    integer_weights = bool(rng.integers(0, 2))
+    postings: dict[int, tuple[np.ndarray, np.ndarray]] = {}
+    arrays: dict[int, tuple] = {}
+    for tid in sorted(rng.choice(1000, size=n_terms, replace=False).tolist()):
         n_post = int(rng.integers(1, n_docs + 1))
-        ids = np.sort(rng.choice(n_docs, size=n_post, replace=False)).astype(np.int64)
-        ws = rng.normal(loc=1.0, size=n_post)
-        qw = float(rng.integers(1, 4))
-        firsts, lasts, maxws, gaps, wb = [], [], [], [], []
-        for off in range(0, n_post, block_size):
-            f, l, m, g, w_ = encode_postings_block(
-                ids[off : off + block_size], ws[off : off + block_size]
-            )
-            firsts.append(f)
-            lasts.append(l)
-            maxws.append(m)
-            gaps.append(g)
-            wb.append(w_)
-        lists.append(
-            _ListIter(
-                tid, qw,
-                np.array(firsts, dtype=np.int64),
-                np.array(lasts, dtype=np.int64),
-                np.array(maxws, dtype=np.float64),
-                gaps, wb,
-            )
-        )
-        for d, w2 in zip(ids, ws):
-            truth[d] = truth.get(d, 0.0) + qw * float(w2)
-    expect = sorted(truth.items(), key=lambda t: (-t[1], t[0]))[:k]
-    got = _wand_bucket(lists, k)
-    assert len(got) == len(expect)
-    for g, e in zip(got, expect):
-        assert g[0] == e[0], f"doc {g[0]} vs {e[0]}"
-        assert abs(g[1] - e[1]) < 1e-12
+        ids = base + np.sort(rng.choice(n_docs, size=n_post, replace=False))
+        if integer_weights:
+            ws = rng.integers(-2, 4, size=n_post).astype(np.float64)
+        else:
+            ws = rng.normal(loc=1.0, size=n_post)
+        postings[tid] = (ids.astype(np.int64), ws)
+        arrays[tid] = _encode_run(ids, ws, block_size)
+        hit["multi_block"] += n_post > block_size
+        hit["negative_weight"] += bool((ws < 0).any())
+
+    queries = []
+    for qi in range(int(rng.integers(1, 6))):
+        present = list(postings)
+        tids = set(rng.choice(present, size=int(rng.integers(0, len(present) + 1)),
+                              replace=False).tolist())
+        tids |= set(rng.integers(1000, 1100, size=int(rng.integers(0, 3))).tolist())
+        if not tids:
+            tids = {2000}
+        terms = sorted((int(t), float(rng.integers(1, 4))) for t in tids)
+        queries.append((f"q{qi}", int(rng.integers(1, 2 * n_docs)), terms))
+
+    out = {"query_id": [], "doc_id": [], "score": [], "k": []}
+    _taat_bucket(arrays, queries, out)
+    got = list(zip(out["query_id"], out["doc_id"], out["score"], out["k"]))
+
+    expect = []
+    for query_id, k, terms in queries:
+        truth: dict[int, float] = {}
+        for tid, qw in terms:  # ascending term_id, the canonical order
+            if tid not in postings:
+                hit["absent_term"] += 1
+                continue
+            for d, w in zip(*postings[tid]):
+                truth[int(d)] = truth.get(int(d), 0.0) + qw * float(w)
+        ranked = sorted(truth.items(), key=lambda t: (-t[1], t[0]))
+        hit["no_matched_term"] += not ranked
+        hit["k_above_candidates"] += k > len(ranked) > 0
+        hit["tie_at_k"] += len(ranked) > k and ranked[k - 1][1] == ranked[k][1]
+        expect += [(query_id, d, s, k) for d, s in ranked[:k]]
+    hit["multi_query"] += len(queries) > 1
+    assert got == expect
 
 
-def test_wand_kernel_fuzz():
-    rng = np.random.default_rng(1234)
-    for _ in range(250):
-        _run_trial(rng)
-
-
-def _run_maxscore_trial(rng) -> None:
-    from ir_base_spark.query.wand import _maxscore_query
-
-    n_docs = int(rng.integers(5, 300))
-    n_terms = int(rng.integers(1, 7))
-    k = int(rng.integers(1, 15))
-    chunk = int(rng.integers(2, 40))  # tiny chunks stress θ/frontier logic
-    lists = []
-    truth: dict[int, float] = {}
-    for tid in range(n_terms):
-        n_post = int(rng.integers(1, n_docs + 1))
-        ids = np.sort(rng.choice(n_docs, size=n_post, replace=False)).astype(
-            np.int64
-        )
-        ws = rng.normal(loc=1.0, size=n_post)
-        qw = float(rng.integers(1, 4))
-        ub = max(0.0, qw * float(ws.max()))
-        lists.append((tid, qw, ids, ws.astype(np.float64), ub))
-        for d, w2 in zip(ids, ws):
-            truth[d] = truth.get(d, 0.0) + qw * float(w2)
-    expect = sorted(truth.items(), key=lambda t: (-t[1], t[0]))[:k]
-    docs, scores = _maxscore_query(lists, k, chunk=chunk)
-    order = np.lexsort((docs, -scores))[:k]
-    got = [(int(docs[i]), float(scores[i])) for i in order]
-    assert len(got) == len(expect)
-    for g, e in zip(got, expect):
-        assert g[0] == e[0], f"doc {g[0]} vs {e[0]}"
-        assert abs(g[1] - e[1]) < 1e-12
-
-
-def test_maxscore_kernel_fuzz():
-    """Chunked-MaxScore pruning soundness vs brute force, including
-    negative weights (clamped UBs) and tiny chunk sizes."""
-    rng = np.random.default_rng(4321)
-    for _ in range(250):
-        _run_maxscore_trial(rng)
-
-
-def _run_bmw_trial(rng) -> None:
-    from ir_base_spark.query.wand import _bmw_query
-
-    n_docs = int(rng.integers(5, 300))
-    n_terms = int(rng.integers(1, 7))
-    k = int(rng.integers(1, 15))
-    block_size = int(rng.integers(2, 10))
-    lists = []
-    truth: dict[int, float] = {}
-    for tid in range(n_terms):
-        n_post = int(rng.integers(1, n_docs + 1))
-        ids = np.sort(rng.choice(n_docs, size=n_post, replace=False)).astype(
-            np.int64
-        )
-        ws = rng.normal(loc=1.0, size=n_post)
-        qw = float(rng.integers(1, 4))
-        firsts, lasts, maxws, gaps, wb = [], [], [], [], []
-        for off in range(0, n_post, block_size):
-            f, l, m, g, w_ = encode_postings_block(
-                ids[off : off + block_size], ws[off : off + block_size]
-            )
-            firsts.append(f)
-            lasts.append(l)
-            maxws.append(m)
-            gaps.append(g)
-            wb.append(w_)
-        maxws_arr = np.array(maxws, dtype=np.float64)
-        ub = max(0.0, qw * float(maxws_arr.max()))
-        lists.append(
-            (
-                tid, qw,
-                np.array(firsts, dtype=np.int64),
-                np.array(lasts, dtype=np.int64),
-                maxws_arr, gaps, wb, None, ub,
-            )
-        )
-        for d, w2 in zip(ids, ws):
-            truth[d] = truth.get(d, 0.0) + qw * float(w2)
-    expect = sorted(truth.items(), key=lambda t: (-t[1], t[0]))[:k]
-    docs, scores = _bmw_query(lists, k, cache={})
-    order = np.lexsort((docs, -scores))[:k]
-    got = [(int(docs[i]), float(scores[i])) for i in order]
-    assert len(got) == len(expect)
-    for g, e in zip(got, expect):
-        assert g[0] == e[0], f"doc {g[0]} vs {e[0]}"
-        assert abs(g[1] - e[1]) < 1e-12
-
-
-def test_bmw_vectorized_kernel_fuzz():
-    """Vectorized block-max WAND (the algo='wand' production kernel)
-    pruning soundness vs brute force: tiny blocks stress the window
-    boundary logic, negative weights stress the clamped bounds."""
-    rng = np.random.default_rng(9999)
-    for _ in range(250):
-        _run_bmw_trial(rng)
+def test_taat_kernel_fuzz():
+    rng = np.random.default_rng(20261017)
+    hit: Counter = Counter()
+    for _ in range(300):
+        _run_trial(rng, hit)
+    for case in ("multi_block", "negative_weight", "absent_term",
+                 "no_matched_term", "k_above_candidates", "tie_at_k",
+                 "multi_query"):
+        assert hit[case] > 0, case

@@ -112,30 +112,13 @@ def child(cores: int, input_path: str, n_queries: int, partitions: int = 32) -> 
     )
     qt = analyze_query_terms(spark, qpdf).cache()
     qt.count()
-    # batch_auto_sec = the PRODUCTION batch route (algo="auto" →
-    # chunked MaxScore for a 100-query batch — recorded under its OWN
-    # key so cross-round comparisons never mistake it for the cursor
-    # kernel; rounds <= 3 recorded this as "wand_sec"); bmw_sec = the
-    # block-max WAND kernel (VECTORIZED window-at-a-time since r5; the
-    # per-posting cursor kernel is demoted to algo="cursor" and not
-    # benchmarked); taat_sec = the exhaustive vectorized scorer.
-    # All three are rank-identical
-    # (tests/test_wand.py::test_taat_matches_wand_sharded).
+    # batch_auto_sec = the production batch route, the one TAAT kernel
+    # (rounds <= 3 recorded this route as "wand_sec")
     t0 = time.time()
     wand_topk_sharded(spark, root, qt, algo="auto").write.format("noop").mode(
         "overwrite"
     ).save()
     batch_auto_sec = time.time() - t0
-    t0 = time.time()
-    wand_topk_sharded(spark, root, qt, algo="taat").write.format("noop").mode(
-        "overwrite"
-    ).save()
-    taat_sec = time.time() - t0
-    t0 = time.time()
-    wand_topk_sharded(spark, root, qt, algo="wand").write.format("noop").mode(
-        "overwrite"
-    ).save()
-    bmw_sec = time.time() - t0
 
     pipeline_sec = build_sec + finalize_sec + block_sec
     print(
@@ -149,9 +132,6 @@ def child(cores: int, input_path: str, n_queries: int, partitions: int = 32) -> 
                 "block_sec": round(block_sec, 3),
                 "pipeline_sec": round(pipeline_sec, 3),
                 "batch_auto_sec": round(batch_auto_sec, 3),
-                "batch_auto_algo": "maxscore",
-                "taat_sec": round(taat_sec, 3),
-                "bmw_sec": round(bmw_sec, 3),
                 "turns_per_sec": round(n_turns / pipeline_sec, 1),
             }
         )
@@ -267,12 +247,9 @@ def main() -> None:
         runs = all_runs[c]
         best = min(runs, key=lambda r: r["pipeline_sec"])
         best = dict(best)
-        # query phases are independent of the pipeline phases: keep their
-        # own minima across repeats
-        for key in ("batch_auto_sec", "taat_sec", "bmw_sec"):
-            vals = [r[key] for r in runs if r.get(key)]
-            if vals:
-                best[key] = min(vals)
+        # the query phase is independent of the pipeline phases: keep
+        # its own minimum across repeats
+        best["batch_auto_sec"] = min(r["batch_auto_sec"] for r in runs)
         best["n_repeats"] = len(runs)
         results[c] = best
 
@@ -284,16 +261,6 @@ def main() -> None:
     eff_auto = (
         results[lo]["batch_auto_sec"] / results[hi]["batch_auto_sec"]
     ) / ratio
-    eff_taat = (
-        (results[lo]["taat_sec"] / results[hi]["taat_sec"]) / ratio
-        if results[lo].get("taat_sec")
-        else 0.0
-    )
-    eff_bmw = (
-        (results[lo]["bmw_sec"] / results[hi]["bmw_sec"]) / ratio
-        if results[lo].get("bmw_sec")
-        else 0.0
-    )
 
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     payload = {
@@ -301,8 +268,6 @@ def main() -> None:
         "efficiency_pipeline": round(eff_pipeline, 3),
         "efficiency_build": round(eff_build, 3),
         "efficiency_batch_auto_queries": round(eff_auto, 3),
-        "efficiency_taat_queries": round(eff_taat, 3),
-        "efficiency_bmw_queries": round(eff_bmw, 3),
         "convs": args.convs,
         "probes": probes,
         "probe_max_inflation": args.probe_max,
@@ -335,27 +300,15 @@ def main() -> None:
         + f" | {eff_pipeline:.3f} |"
     )
     md.append(
-        "| 100-query batch, production route (auto → chunked MaxScore) | "
+        "| 100-query batch, production route (TAAT) | "
         + " | ".join(str(results[c]["batch_auto_sec"]) for c in cores)
         + f" | {eff_auto:.3f} |"
     )
-    if results[lo].get("taat_sec"):
-        md.append(
-            "| 100-query vectorized TAAT batch | "
-            + " | ".join(str(results[c]["taat_sec"]) for c in cores)
-            + f" | {eff_taat:.3f} |"
-        )
-    if results[lo].get("bmw_sec"):
-        md.append(
-            "| 100-query per-posting cursor block-max WAND (interactive kernel) | "
-            + " | ".join(str(results[c]["bmw_sec"]) for c in cores)
-            + f" | {eff_bmw:.3f} |"
-        )
     md += [
         "",
         f"Repeats: each level ran {args.repeat}x (alternating order); the "
         "reported pipeline phases come from the repeat with the minimal "
-        "pipeline time per level, query phases are per-phase minima — "
+        "pipeline time per level, the query phase is its own minimum — "
         "least-noise observations (noise on a shared box only adds time).",
         "",
         "Throughput: "
