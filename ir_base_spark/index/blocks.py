@@ -11,8 +11,10 @@ engine instead stores term-major posting blocks:
   doc_id IS the stable turn ordering, and delta gaps are small;
 - gaps are varbyte-encoded (vectorized numpy encode/decode, no per-value
   Python in the build hot path);
-- weights stay float64 (rank identity forbids quantization); stored as
-  raw little-endian bytes;
+- weights are exact doubles (rank identity forbids quantization): the
+  in-memory index (build_block_index) stores raw little-endian float64;
+  the on-disk shards (encode_shards_from_postings) store varbyte term
+  frequencies and decode rebuilds the identical doubles from sidecars;
 - ``max_weight`` per block is kept in the format; the query kernel
   (query/wand.py) scores exhaustively and does not read it.
 
@@ -153,36 +155,42 @@ def encode_postings_block(
     )
 
 
+def _tf_weights(payload: bytes, ids: np.ndarray, meta) -> np.ndarray:
+    """Exact BM25 doubles of a TF payload: the encoder's expression and
+    operand order, so the result is bit-identical to the weights it
+    computed. ``meta=(idf_t, denom, lo, nrm)``: the term's IDF, the
+    shard's per-doc saturation denominator and per-doc L1/L2 norm
+    (``nrm=None`` for norm 0), both indexed by ``doc_id - lo``."""
+    from .weights import K1 as _K1  # B is folded into the sidecar denom
+
+    idf_t, denom, lo, nrm = meta
+    tf = varbyte_decode(payload).astype(np.float64)
+    w = idf_t * (tf * (_K1 + 1.0) / (denom[ids - lo] + tf))
+    return w if nrm is None else w / nrm[ids - lo]
+
+
 def decode_postings_block(
     first_doc: int, doc_gaps: bytes, payload: bytes, meta=None
 ) -> tuple[np.ndarray, np.ndarray]:
     """(doc ids, float64 weights) for one block.
 
-    ``meta=None``: ``payload`` is raw float64 weights (the
-    weights-artifact format of encode_shards / build_block_index).
+    ``meta=None``: ``payload`` is raw float64 weights — the in-memory
+    format of build_block_index only.
 
-    ``meta=(idf_t, denom, lo)``: the TF-payload format of
+    ``meta=(idf_t, denom, lo, nrm)``: the on-disk TF-payload format of
     encode_shards_from_postings — ``payload`` is varbyte TERM FREQUENCY
-    (~1 byte/posting instead of 8), and the exact BM25 double is
-    reconstructed here with the identical expression and operand order
-    the encoder used (idf from the term sidecar, the per-doc saturation
-    denominator from the per-shard doc-length sidecar), so scores are
-    bit-identical to the stored-weights format. 8x fewer payload bytes
-    touch disk, page cache and the memory bus on both the encode and
-    every decode.
+    (~1 byte/posting instead of 8), and the exact weight is
+    reconstructed by _tf_weights (idf from the term sidecar, the per-doc
+    saturation denominator and norm from the per-shard doc-length
+    sidecar). 8x fewer payload bytes touch disk, page cache and the
+    memory bus on both the encode and every decode.
     """
     gaps = varbyte_decode(doc_gaps).astype(np.int64)
     gaps[0] = first_doc
     ids = np.cumsum(gaps)
     if meta is None:
-        w = np.frombuffer(payload, dtype=np.float64)
-    else:
-        from .weights import K1 as _K1  # B is folded into the sidecar denom
-
-        idf_t, denom, lo = meta
-        tf = varbyte_decode(payload).astype(np.float64)
-        w = idf_t * (tf * (_K1 + 1.0) / (denom[ids - lo] + tf))
-    return ids, w
+        return ids, np.frombuffer(payload, dtype=np.float64)
+    return ids, _tf_weights(payload, ids, meta)
 
 
 def decode_postings_run(
@@ -202,9 +210,8 @@ def decode_postings_run(
     leading gap is stored as 0 (first_doc rides in metadata), so
     rewriting position start_i to first_doc_i - last_doc_{i-1} makes a
     single global cumsum produce exactly the per-block cumsums.
-    Weights use the same expression and operand order as
-    decode_postings_block (elementwise, so per-posting results are
-    bit-identical)."""
+    Weights use the same _tf_weights as decode_postings_block
+    (elementwise, so per-posting results are bit-identical)."""
     nb = len(gaps_list)
     if nb == 0:
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
@@ -227,45 +234,49 @@ def decode_postings_run(
     g[value_starts[1:]] = firsts[1:] - lasts[:-1]
     ids = np.cumsum(g)
     if meta is None:
-        w = np.frombuffer(b"".join(payload_list), dtype=np.float64)
-    else:
-        from .weights import K1 as _K1  # B folded into the sidecar denom
-
-        idf_t, denom, lo = meta
-        tf = varbyte_decode(b"".join(payload_list)).astype(np.float64)
-        w = idf_t * (tf * (_K1 + 1.0) / (denom[ids - lo] + tf))
-    return ids, w
+        return ids, np.frombuffer(b"".join(payload_list), dtype=np.float64)
+    return ids, _tf_weights(b"".join(payload_list), ids, meta)
 
 
 _PAYLOAD_KEY = b"sg_payload"
 _PAYLOAD_TF = b"tfv1"
 
 
-def _write_shard_doclen(out_dir: str, lo: int, dl: np.ndarray) -> None:
+class BlockFormatError(ValueError):
+    """An on-disk block shard is not in the TF-payload format."""
+
+
+def _write_shard_doclen(
+    out_dir: str, lo: int, dl: np.ndarray, nrm: np.ndarray | None
+) -> None:
     """Per-shard doc-length sidecar for the TF-payload format: doc
     lengths over the shard's [lo, lo+span) doc-id range, int32 (doc
-    lengths are token counts per turn — far below 2^31)."""
+    lengths are token counts per turn — far below 2^31), plus the
+    per-doc L1/L2 weight norms (float64) when the index has norm 1|2."""
     path = os.path.join(out_dir, "_doclen.npz")
     tmp = path + f".tmp{os.getpid()}"
+    arrays = {"lo": np.int64(lo), "dl": dl.astype(np.int32)}
+    if nrm is not None:
+        arrays["nrm"] = nrm
     with open(tmp, "wb") as f:
-        np.savez(f, lo=np.int64(lo), dl=dl.astype(np.int32))
+        np.savez(f, **arrays)
     os.replace(tmp, path)
 
 
 _DOCLEN_CACHE: dict = {}
 
 
-def load_shard_doclen(shard_dir: str) -> tuple[int, np.ndarray]:
-    """(lo, doc_len int32 array) for one shard dir, worker-cached by
-    mtime (Spark reuses Python workers across jobs — same staleness
-    rule as _sidecar_token)."""
+def load_shard_doclen(shard_dir: str) -> tuple:
+    """(lo, doc_len int32 array, norm float64 array or None) for one
+    shard dir, worker-cached by mtime (Spark reuses Python workers
+    across jobs — same staleness rule as _sidecar_token)."""
     path = os.path.join(shard_dir, "_doclen.npz")
     st = os.stat(path)
     key = (path, st.st_mtime_ns, st.st_size)
     hit = _DOCLEN_CACHE.get(key)
     if hit is None:
         with np.load(path) as z:
-            hit = (int(z["lo"]), z["dl"])
+            hit = (int(z["lo"]), z["dl"], z["nrm"] if "nrm" in z else None)
         if len(_DOCLEN_CACHE) > 256:  # bound worker-resident sidecars
             _DOCLEN_CACHE.clear()
         _DOCLEN_CACHE[key] = hit
@@ -290,102 +301,6 @@ def _blocks_arrow_schema():
             ("weights", pa.binary()),
         ]
     )
-
-
-def encode_shards(
-    spark,
-    index_root: str,
-    block_size: int = DEFAULT_BLOCK_SIZE,
-) -> dict:
-    """Doc-shard block encode with ZERO posting movement through Spark.
-
-    Input: ``<index_root>/weights/partition_id=<p>/`` (finalize_sharded);
-    output: ``<index_root>/blocks/partition_id=<p>/blocks.parquet``.
-
-    Each task receives only a PATH (a one-row Arrow batch); the shard's
-    postings are read directly with pyarrow (C++ parquet reader), sorted
-    (term_id, doc_id) with one numpy lexsort — the shard is one bucket,
-    so this local sort replaces the old cluster-wide
-    repartition(term_id, bucket) shuffle — encoded vectorized, and the
-    block file is written back with pyarrow (tmp + atomic rename).
-    Posting bytes never cross the JVM↔Python socket in either direction
-    (measured: that Arrow row stream, not the encode kernel, dominated
-    the old block phase and did not scale with cores). Per-shard
-    manifest rows (blocks, bytes, wall) come back as the only task
-    output. Row groups are kept small so query-time term_id predicate
-    pushdown prunes at row-group granularity.
-    """
-    import glob
-
-    weights_root = os.path.join(index_root, "weights")
-    blocks_root = os.path.join(index_root, "blocks")
-    os.makedirs(blocks_root, exist_ok=True)
-    shard_dirs = sorted(glob.glob(os.path.join(weights_root, "partition_id=*")))
-    rows = [
-        (int(d.rsplit("=", 1)[1]), d) for d in shard_dirs
-    ]
-    fdf = spark.createDataFrame(rows, "partition_id int, path string").repartition(
-        max(1, len(rows))
-    )
-
-    def kernel(batches):
-        import time as _t
-
-        import pyarrow.parquet as pq
-
-        for pdf in batches:
-            for pid, path in zip(pdf["partition_id"], pdf["path"]):
-                t0 = _t.time()
-                tbl = pq.read_table(
-                    path, columns=["term_id", "doc_id", "weight"], use_threads=False
-                )
-                t = tbl["term_id"].to_numpy().astype(np.int64, copy=False)
-                d = tbl["doc_id"].to_numpy().astype(np.int64, copy=False)
-                wgt = tbl["weight"].to_numpy().astype(np.float64, copy=False)
-                # finalize_sharded writes each shard pre-sorted; a file
-                # split/merge could break that, so verify (two vector
-                # compares) and lexsort only as the fallback
-                same_t = t[1:] == t[:-1]
-                is_sorted = bool(
-                    np.all(t[1:] >= t[:-1])
-                    and np.all(d[1:][same_t] > d[:-1][same_t])
-                ) if t.shape[0] > 1 else True
-                if not is_sorted:
-                    order = np.lexsort((d, t))
-                    t, d, wgt = t[order], d[order], wgt[order]
-                enc = _encode_sorted_run_arrow(t, int(pid), d, wgt, block_size)
-                out_dir = os.path.join(blocks_root, f"partition_id={int(pid)}")
-                os.makedirs(out_dir, exist_ok=True)
-                out_path = os.path.join(out_dir, "blocks.parquet")
-                tmp = out_path + f".tmp{os.getpid()}"
-                pq.write_table(enc, tmp, row_group_size=4096)
-                os.replace(tmp, out_path)
-                yield pd.DataFrame(
-                    {
-                        "partition_id": pd.Series([int(pid)], dtype="int32"),
-                        "n_blocks": pd.Series([enc.num_rows], dtype="int64"),
-                        "bytes": pd.Series(
-                            [os.path.getsize(out_path)], dtype="int64"
-                        ),
-                        "wall_sec": pd.Series([_t.time() - t0], dtype="float64"),
-                        "presorted": pd.Series(
-                            [1 if is_sorted else 0], dtype="int32"
-                        ),
-                    }
-                )
-
-    report = fdf.mapInPandas(
-        kernel,
-        "partition_id int, n_blocks long, bytes long, wall_sec double, "
-        "presorted int",
-    ).collect()
-    return {
-        "shards": len(report),
-        "blocks": int(sum(r["n_blocks"] for r in report)),
-        "bytes": int(sum(r["bytes"] for r in report)),
-        "presorted_shards": int(sum(r["presorted"] for r in report)),
-        "block_size": block_size,
-    }
 
 
 # per-worker memo for the small lookup tables the direct encoder needs
@@ -485,21 +400,10 @@ def load_query_sidecar_views(index_root: str):
     return hit
 
 
-def _bm25_weight_np(tf, dl, df, n_docs: float, avg: float):
-    """numpy BM25, op-for-op the Catalyst expression in weights.py
-    (same association order → bit-identical doubles)."""
-    from .weights import B, K1
-
-    idf = np.log((n_docs - df + 0.5) / (df + 0.5))
-    nlen = dl / avg
-    return idf * (tf * (K1 + 1.0) / (K1 * ((1.0 - B) + B * nlen) + tf))
-
-
 def encode_shards_from_postings(
     spark,
     index_root: str,
     block_size: int = DEFAULT_BLOCK_SIZE,
-    scheme: str = "BM25",
 ) -> dict:
     """Blocks straight from the tokenize output — the posting stream is
     materialized ONCE in the whole pipeline.
@@ -510,20 +414,18 @@ def encode_shards_from_postings(
     sidecar tables (C-level hash joins on pandas Index — the dictionary
     is ~MBs, the conv base is conversation-level), recomputes doc_len
     over RETAINED terms (exactly build_index's pruning semantics; equal
-    to the stored length when nothing is pruned), computes the scheme
+    to the stored length when nothing is pruned), computes the BM25
     weight vectorized (bit-identical to weights.set_feature_values),
-    sorts (term_id, doc_id) and writes the shard's block file. Replaces
-    the 2× posting materialization (weights artifact) of the
-    finalize_sharded path — at 14.3M turns that artifact write was the
-    single largest finalize cost at every parallelism level.
+    sorts (term_id, doc_id) and writes the shard's block file.
+
+    ``norm`` 1|2 (from stats.json, set by finalize_lite): each doc's L1
+    or L2 norm of its BM25 weights, accumulated in ascending term_id
+    order over the shard (a doc's postings never span shards), goes to
+    the doclen sidecar — 0 stored as 1.0, so dividing by it reproduces
+    set_feature_values' ``when(denom > 0)`` — and decode divides by it.
     """
     import glob
 
-    if scheme.upper() != "BM25":
-        raise ValueError(
-            "direct path supports per-posting schemes; use "
-            "finalize_sharded + encode_shards for others"
-        )
     post_root = os.path.join(index_root, "postings")
     blocks_root = os.path.join(index_root, "blocks")
     os.makedirs(blocks_root, exist_ok=True)
@@ -569,7 +471,7 @@ def encode_shards_from_postings(
                 t_read = _t.time()
                 if tbl.num_rows == 0:
                     enc = _blocks_arrow_schema().empty_table()
-                    tid = doc = w = None
+                    tid = None
                 else:
                     # dictionary semi-join in C++: position of each
                     # posting's term in the terms value set (null =
@@ -631,13 +533,29 @@ def encode_shards_from_postings(
                     else:
                         order = np.lexsort((doc, tid))
                     t_sort = _t.time()
+                    w_s = w[order]
+                    nrm = None
+                    if stats["norm"]:
+                        # per-doc norm; bincount adds in array order, so
+                        # each doc's terms fold in ascending term_id
+                        rel_s = rel[order]
+                        if stats["norm"] == 1:
+                            nrm = np.bincount(
+                                rel_s, weights=np.abs(w_s), minlength=span
+                            )
+                        else:
+                            nrm = np.sqrt(np.bincount(
+                                rel_s, weights=w_s * w_s, minlength=span
+                            ))
+                        nrm[~(nrm > 0)] = 1.0
+                        w_s = w_s / nrm[rel_s]
                     # TF payload (varbyte, ~1 B/posting): the float64
                     # weights feed only max_weight; query decode
                     # reconstructs the identical doubles from
                     # tf + idf sidecar + the doclen sidecar below
                     enc = _encode_sorted_run_arrow(
-                        tid[order], int(pid), doc[order], w[order],
-                        block_size, tf=tf_i[order],
+                        tid[order], int(pid), doc[order], w_s,
+                        block_size, tf_i[order],
                     )
                 elif tid is not None:
                     t_sort = _t.time()
@@ -659,7 +577,7 @@ def encode_shards_from_postings(
                 # renames a reader could pair new doc lengths with old
                 # blocks. Re-encode into a fresh root and swap the root.
                 if enc.num_rows:
-                    _write_shard_doclen(out_dir, lo, dl_acc)
+                    _write_shard_doclen(out_dir, lo, dl_acc, nrm)
                 os.replace(tmp, out_path)
                 t_write = _t.time()
                 yield pd.DataFrame(
@@ -698,12 +616,6 @@ def encode_shards_from_postings(
             max((r["wall_sec"] for r in report), default=0.0), 3
         ),
     }
-
-
-def load_sharded_blocks(spark, index_root: str):
-    """blocks DataFrame (BLOCK_SCHEMA + partition_id) from encode_shards
-    output; bucket == partition_id == doc shard."""
-    return spark.read.parquet(os.path.join(index_root, "blocks"))
 
 
 # ---------------------------------------------------------------- build
@@ -790,8 +702,8 @@ def _encode_sorted_run(
     block_size: int,
 ) -> pd.DataFrame:
     """Vectorized multi-group multi-block encoder → pandas (the Arrow-
-    socket streaming path of build_block_index; the on-disk shard paths
-    use _encode_sorted_run_arrow, which never materializes Python bytes).
+    socket streaming path of build_block_index; the on-disk shard path
+    uses _encode_sorted_run_arrow, which never materializes Python bytes).
     """
     n = doc_id.shape[0]
     if n == 0:
@@ -834,22 +746,21 @@ def _encode_sorted_run_arrow(
     doc_id: np.ndarray,
     weight: np.ndarray,
     block_size: int,
-    tf: np.ndarray | None = None,
+    tf: np.ndarray,
 ):
-    """Arrow-native encoder for the shard paths: the two binary columns
-    are built with ``BinaryArray.from_buffers`` over the single varbyte /
-    payload buffers (blocks tile the run contiguously), so NO per-block
+    """Arrow-native encoder for the on-disk shards: the two binary
+    columns are built with ``BinaryArray.from_buffers`` over the single
+    varbyte buffers (blocks tile the run contiguously), so NO per-block
     Python bytes objects and no pandas→Arrow conversion exist anywhere —
     measured, that conversion was a flat (non-scaling) term of the old
     encode kernel. Returns a pyarrow Table in BLOCK_SCHEMA order.
 
-    ``tf=None``: the payload column carries raw float64 weights.
-    ``tf`` given: the TF-payload format — the column carries varbyte
-    term frequencies (~1 byte vs 8) and the table is stamped with the
-    ``sg_payload=tfv1`` schema metadata; ``weight`` is still consumed
-    for the exact per-block max_weight pruning bound. Requires the
-    per-shard doclen sidecar (decode_postings_block reconstructs the
-    identical doubles from tf + sidecars).
+    TF-payload format: the payload column carries varbyte term
+    frequencies (~1 byte vs 8) and the table is stamped with the
+    ``sg_payload=tfv1`` schema metadata; ``weight`` is consumed only
+    for the per-block max_weight. Requires the per-shard doclen sidecar
+    (decode_postings_block reconstructs the identical doubles from tf +
+    sidecars).
     """
     import pyarrow as pa
 
@@ -863,7 +774,7 @@ def _encode_sorted_run_arrow(
     )
     nb = len(starts)
     total_gap_bytes = int(offs[-1])
-    if total_gap_bytes >= (1 << 31) or n * 8 >= (1 << 31):
+    if total_gap_bytes >= (1 << 31):
         raise ValueError(
             f"shard posting payload exceeds 2 GiB ({total_gap_bytes} gap "
             "bytes); split the shard (smaller doc-range buckets)"
@@ -874,39 +785,25 @@ def _encode_sorted_run_arrow(
     gaps_col = pa.BinaryArray.from_buffers(
         pa.binary(), nb, [None, pa.py_buffer(gap_offs), pa.py_buffer(buf_arr)]
     )
-    if tf is not None:
-        tf_buf, tf_nbytes = _varbyte_encode_arr(tf)
-        tf_offs_all = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(tf_nbytes, out=tf_offs_all[1:])
-        if tf_offs_all[-1] > np.iinfo(np.int32).max:
-            # BinaryArray offsets are int32; narrowing past 2^31 would
-            # silently wrap into corrupt offsets. ~2e9 postings per
-            # shard means the shard width (bucket_bits) is mis-sized.
-            raise ValueError(
-                f"TF payload for shard exceeds int32 BinaryArray offsets "
-                f"({int(tf_offs_all[-1])} bytes); reduce shard width "
-                f"(bucket_bits) so fewer postings land per shard"
-            )
-        w_offs = np.empty(nb + 1, dtype=np.int32)
-        w_offs[:-1] = tf_offs_all[starts]
-        w_offs[-1] = int(tf_offs_all[-1])
-        weights_col = pa.BinaryArray.from_buffers(
-            pa.binary(), nb, [None, pa.py_buffer(w_offs), pa.py_buffer(tf_buf)]
+    tf_buf, tf_nbytes = _varbyte_encode_arr(tf)
+    tf_offs_all = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(tf_nbytes, out=tf_offs_all[1:])
+    if tf_offs_all[-1] > np.iinfo(np.int32).max:
+        # BinaryArray offsets are int32; narrowing past 2^31 would
+        # silently wrap into corrupt offsets. ~2e9 postings per
+        # shard means the shard width (bucket_bits) is mis-sized.
+        raise ValueError(
+            f"TF payload for shard exceeds int32 BinaryArray offsets "
+            f"({int(tf_offs_all[-1])} bytes); reduce shard width "
+            f"(bucket_bits) so fewer postings land per shard"
         )
-        schema = schema.with_metadata({_PAYLOAD_KEY: _PAYLOAD_TF})
-    else:
-        if n * 8 > np.iinfo(np.int32).max:
-            raise ValueError(
-                f"float64 payload for shard exceeds int32 BinaryArray "
-                f"offsets ({n} postings); reduce shard width (bucket_bits)"
-            )
-        w_offs = np.empty(nb + 1, dtype=np.int32)
-        w_offs[:-1] = starts * 8
-        w_offs[-1] = n * 8
-        w_contig = np.ascontiguousarray(weight, dtype=np.float64)
-        weights_col = pa.BinaryArray.from_buffers(
-            pa.binary(), nb, [None, pa.py_buffer(w_offs), pa.py_buffer(w_contig)]
-        )
+    w_offs = np.empty(nb + 1, dtype=np.int32)
+    w_offs[:-1] = tf_offs_all[starts]
+    w_offs[-1] = int(tf_offs_all[-1])
+    weights_col = pa.BinaryArray.from_buffers(
+        pa.binary(), nb, [None, pa.py_buffer(w_offs), pa.py_buffer(tf_buf)]
+    )
+    schema = schema.with_metadata({_PAYLOAD_KEY: _PAYLOAD_TF})
     return pa.Table.from_arrays(
         [
             pa.array(term_id[starts], type=pa.int64()),

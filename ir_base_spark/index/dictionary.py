@@ -204,51 +204,16 @@ def conv_doc_base(doc_lens: DataFrame, num_partitions: int = 32) -> DataFrame:
     ).select("conv_id", "base")
 
 
-def conv_doc_base_with_stats(
-    doc_lens: DataFrame, num_partitions: int = 32
-) -> tuple[DataFrame, int, float]:
-    """conv_doc_base PLUS the corpus scalar constants, from ONE
-    conversation-level aggregation: per-conv doc count and length sum
-    ride the same groupBy that feeds the base cumsum, so n_docs and
-    avg_doc_len derive from the (small, checkpointed) conversation
-    table instead of a second full pass over doc_lens — the separate
-    corpus_stats scan was a measured non-scaling term of finalize.
-
-    avg_doc_len stays bit-identical to corpus_stats: doc_len sums are
-    integer-exact well below 2^53, so Σlen/Σcount equals avg() however
-    the partials associate.
-
-    Returns (base DataFrame(conv_id, base), n_docs, avg_doc_len).
-    """
-    # the cumsum's boundary-sampling pass and its shuffle pass would
-    # otherwise each re-run this full doc_lens aggregation; the conv
-    # table is tiny, so cache it for the second pass and release after
-    # the checkpoint inside two_phase_cumsum has materialized. The
-    # corpus totals ride the cumsum's own offsets collect — zero extra
-    # jobs for stats.
-    ext = doc_lens.groupBy("conv_id").agg(
-        (F.max("turn_idx") + 1).cast("long").alias("_n"),
-        F.count(F.lit(1)).alias("_cnt"),
-        F.sum("doc_len").cast("long").alias("_sum"),
-    ).cache()
-    totals: dict = {}
-    cum = two_phase_cumsum(
-        ext, "conv_id", "_n", "base", num_partitions=num_partitions,
-        extra_sums=["_cnt", "_sum"], totals_out=totals,
-    )
-    ext.unpersist()
-    n_docs = int(totals.get("_cnt") or 0)
-    avg = (float(totals["_sum"]) / n_docs) if n_docs else 0.0
-    return cum.select("conv_id", "base"), n_docs, avg
-
-
 def conv_doc_base_with_stats_ranged(
     doc_lens: DataFrame,
 ) -> tuple:
-    """conv_doc_base_with_stats for doc_lens that carry the build's
-    ``partition_id`` column (the conv_partition_map contract: each
-    partition owns a CONTIGUOUS conv_id range, ranges ascending in
-    partition_id).
+    """conv_doc_base PLUS the corpus scalar constants (n_docs,
+    avg_doc_len), for doc_lens that carry the build's ``partition_id``
+    column (the conv_partition_map contract: each partition owns a
+    CONTIGUOUS conv_id range, ranges ascending in partition_id). Per-conv
+    doc count and length sum ride the same conversation-level groupBy
+    that feeds the base cumsum, so the corpus constants need no second
+    pass over doc_lens.
 
     The data-defined ranges replace repartitionByRange entirely, which
     removes BOTH non-scaling terms of the generic cumsum: the boundary
@@ -268,8 +233,9 @@ def conv_doc_base_with_stats_ranged(
     Returns (base DataFrame(conv_id, base), n_docs, avg_doc_len,
     release) — ``release()`` unpersists the backing conv-level cache
     once the caller has consumed ``base`` (e.g. after the base/ write);
-    values are identical to conv_doc_base_with_stats (same math,
-    associativity-safe integer sums).
+    values are identical to conv_doc_base + corpus_stats (doc_len sums
+    are integer-exact well below 2^53, so Σlen/Σcount equals avg()
+    however the partials associate).
     """
     ext = doc_lens.groupBy("partition_id", "conv_id").agg(
         (F.max("turn_idx") + 1).cast("long").alias("_n"),

@@ -23,7 +23,8 @@ raw turn count (conv_partition_map; persisted as conv_parts/) —
 reproducible under restart, independent of input row order, a
 conversation never splits across partitions, and every partition owns a
 CONTIGUOUS doc-id range, so the doc shard doubles as the posting-block
-bucket (zero posting-level shuffle downstream, blocks.encode_shards).
+bucket (zero posting-level shuffle downstream,
+blocks.encode_shards_from_postings).
 At Iceberg scale, stage 0 is replaced by the table's own
 partitioning/manifest metadata (enumerate data files per partition
 range instead of rewriting); the per-partition commit protocol is
@@ -185,7 +186,7 @@ def conv_partition_map(
     doc ids ascend in (conv_id, turn_idx), each partition owns a
     CONTIGUOUS doc-id range: the doc shard IS the posting-block bucket,
     which is what lets the block build run with zero posting-level
-    shuffle (blocks.encode_shards).
+    shuffle (blocks.encode_shards_from_postings).
     """
     from .dictionary import two_phase_cumsum
 
@@ -608,39 +609,18 @@ def term_partials_row_count(index_root: str) -> int:
 def finalize_lite(
     spark: SparkSession,
     index_root: str,
-    scheme: str = "BM25",
+    norm: int = 0,
     min_df: int = 1,
     max_df: int | None = None,
     write_docs: bool = True,
 ):
-    """Metadata-only finalize for the direct postings→blocks path
-    (blocks.encode_shards_from_postings): writes terms/, docs/, base/
-    and stats.json but NO weights artifact — the posting stream is
-    materialized exactly once (the tokenize output); weights are
-    computed vectorized inside the shard encoder from (tf, doc_len,
-    df, N, avgdl). Supports per-posting schemes (norm=0); per-doc
-    norms use finalize_sharded + encode_shards instead.
-
-    Returns (InvertedIndex, base DataFrame).
-    """
-    return _finalize_artifacts(
-        spark, index_root, scheme=scheme, norm=0, min_df=min_df,
-        max_df=max_df, write_docs=write_docs,
-    )
-
-
-def _finalize_artifacts(
-    spark: SparkSession,
-    index_root: str,
-    scheme: str,
-    norm: int,
-    min_df: int = 1,
-    max_df: int | None = None,
-    write_docs: bool = True,
-):
-    """Fused finalize core shared by finalize_lite / finalize_sharded:
-    computes the dictionary, doc lengths, conversation bases and corpus
-    constants and writes terms/ base/ docs/ + stats.json.
+    """Metadata finalize for the postings→blocks path
+    (blocks.encode_shards_from_postings): computes the dictionary, doc
+    lengths, conversation bases and corpus constants and writes terms/
+    base/ docs/ + stats.json (n_docs, avg_doc_len, norm). No weights
+    artifact: the posting stream is materialized exactly once (the
+    tokenize output); BM25 weights and the per-doc L1/L2 ``norm`` are
+    computed vectorized inside the shard encoder.
 
     Scaling shape (this phase was the binding flat term of the pipeline
     at small core counts — fixed driver/job barriers, not data volume):
@@ -649,10 +629,13 @@ def _finalize_artifacts(
       unrelated chain's barrier: [dictionary agg → dense ids → terms/]
       ∥ [doc_lens → conv base cumsum + corpus stats → base/ ∥ docs/].
     - corpus stats ride the conversation-level aggregate
-      (conv_doc_base_with_stats) instead of a second full doc_lens
-      pass.
-    - no separate base.count pin: two_phase_cumsum's eager
-      localCheckpoint already froze the range boundaries.
+      (conv_doc_base_with_stats_ranged) instead of a second full
+      doc_lens pass.
+
+    With ``min_df``/``max_df`` pruning the doc chain depends on the
+    pruned dictionary, so the chains run in sequence: doc lengths are
+    re-projected as Σtf over the kept postings — build_index's pruning
+    semantics (the reference's pass-2 with frozen CV, SURVEY §3.2).
 
     Returns (InvertedIndex, base DataFrame).
     """
@@ -660,53 +643,15 @@ def _finalize_artifacts(
     from .dictionary import (
         assign_doc_ids,
         build_dictionary,
-        conv_doc_base,
         conv_doc_base_with_stats_ranged,
         term_stats_from_partials,
     )
     from .weights import set_feature_values
 
-    pruning = min_df > 1 or max_df is not None
-    if pruning:
-        # rare path: the doc projection depends on the pruned
-        # dictionary, so the chains are sequential by data dependency
-        idx = finalize_index(
-            spark, index_root, scheme=scheme, norm=norm,
-            min_df=min_df, max_df=max_df,
-        )
-        base = conv_doc_base(idx.doc_lens).cache()
-        base.count()
-        docs = assign_doc_ids(idx.doc_lens, base=base)
-        _parallel_jobs(
-            lambda: idx.terms.write.mode("overwrite").parquet(
-                os.path.join(index_root, "terms")
-            ),
-            lambda: base.write.mode("overwrite").parquet(
-                os.path.join(index_root, "base")
-            ),
-            lambda: docs.write.mode("overwrite").parquet(
-                os.path.join(index_root, "docs")
-            ),
-        )
-        return idx, base
-
     # raw postings deliberately NOT cached — page-cached parquet
     # re-reads are cheaper than JVM cache materialization (measured)
     raw_p = load_postings(spark, index_root)
     raw = raw_p.drop("partition_id")
-    # doc_lens KEEPS partition_id: the build's conv-range partitioning
-    # (conv_partition_map: contiguous conv ranges ascending in
-    # partition_id) lets the base cumsum run shuffle-sample-free and
-    # checkpoint-free (conv_doc_base_with_stats_ranged)
-    doc_lens = raw_p.filter(F.col("is_doc_head") == 1).select(
-        "partition_id", "conv_id", "turn_idx", "doc_len"
-    )
-    if write_docs:
-        # two consumers (conv aggregate + the docs export join) — pin it;
-        # with write_docs=False the conv aggregate is the only consumer
-        # (and it is itself cached inside conv_doc_base_with_stats), so
-        # the cache materialization pass would be pure overhead
-        doc_lens = doc_lens.cache()
     box: dict = {}
 
     # build-time per-partition term partials (when complete) replace
@@ -737,6 +682,31 @@ def _finalize_artifacts(
         t.write.mode("overwrite").parquet(os.path.join(index_root, "terms"))
         box["terms"] = t
 
+    pruning = min_df > 1 or max_df is not None
+    if pruning:
+        terms_chain()
+        kept = raw_p.drop("doc_len").join(
+            F.broadcast(box["terms"].select("term")), "term", "left_semi"
+        )
+        doc_lens = kept.groupBy("partition_id", "conv_id", "turn_idx").agg(
+            F.sum("tf").alias("doc_len")
+        )
+    else:
+        # doc_lens KEEPS partition_id: the build's conv-range
+        # partitioning (conv_partition_map: contiguous conv ranges
+        # ascending in partition_id) lets the base cumsum run
+        # shuffle-sample-free and checkpoint-free
+        # (conv_doc_base_with_stats_ranged)
+        doc_lens = raw_p.filter(F.col("is_doc_head") == 1).select(
+            "partition_id", "conv_id", "turn_idx", "doc_len"
+        )
+    if write_docs:
+        # two consumers (conv aggregate + the docs export join) — pin it;
+        # with write_docs=False the conv aggregate is the only consumer
+        # (and it is itself cached inside conv_doc_base_with_stats_ranged),
+        # so the cache materialization pass would be pure overhead
+        doc_lens = doc_lens.cache()
+
     def docs_chain():
         base, n_docs, avg_doc_len, release = conv_doc_base_with_stats_ranged(
             doc_lens
@@ -765,22 +735,27 @@ def _finalize_artifacts(
         _parallel_jobs(*writes)
         release()
 
-    _parallel_jobs(terms_chain, docs_chain)
+    if pruning:
+        docs_chain()
+        raw = kept.drop("partition_id").join(
+            doc_lens.drop("partition_id"), ["conv_id", "turn_idx"]
+        )
+    else:
+        _parallel_jobs(terms_chain, docs_chain)
     n_docs, avg_doc_len = box["stats"]
     _atomic_write_json(
         os.path.join(index_root, "stats.json"),
-        {"n_docs": n_docs, "avg_doc_len": avg_doc_len,
-         "scheme": scheme, "norm": norm},
+        {"n_docs": n_docs, "avg_doc_len": avg_doc_len, "norm": norm},
     )
     terms = box["terms"]
     weights = set_feature_values(
-        raw, terms, n_docs, avg_doc_len, scheme=scheme, norm=norm
+        raw, terms, n_docs, avg_doc_len, scheme="BM25", norm=norm
     )
     idx = InvertedIndex(
         terms=terms, weights=weights,
         doc_lens=doc_lens.drop("partition_id"),
         n_docs=n_docs, avg_doc_len=avg_doc_len,
-        ngrams=1, scheme=scheme, norm=norm,
+        ngrams=1, scheme="BM25", norm=norm,
     )
     return idx, box["base"]
 
@@ -807,149 +782,3 @@ def _parallel_jobs(*thunks) -> None:
         th.join()
     if errors:
         raise errors[0]
-
-
-def finalize_sharded(
-    spark: SparkSession,
-    index_root: str,
-    scheme: str = "BM25",
-    norm: int = 0,
-    min_df: int = 1,
-    max_df: int | None = None,
-):
-    """finalize_index + persisted shard-aligned artifacts.
-
-    Writes under ``index_root``:
-      terms/    (term, term_id, df, ttf)
-      docs/     (conv_id, turn_idx, doc_len, doc_id)
-      weights/partition_id=<p>/  (term_id, doc_id, weight)
-
-    The weights write is SHUFFLE-FREE: postings are read from their
-    doc-shard partition files, every derivation (dictionary join, doc-id
-    base, shard id) is a broadcast hash join or column arithmetic, and
-    partitionBy(partition_id) just routes each task's rows back to its
-    own shard directory. This is the doc-sharded build phase of SURVEY
-    §7.1 taken to its limit: the ONLY turn-level shuffle in the whole
-    index pipeline is gone; what remains keyed-by-term is the (small,
-    pre-aggregated) dictionary statistics aggregation.
-
-    Returns (InvertedIndex, conv-base DataFrame).
-    """
-    # terms/ base/ docs/ + stats.json via the fused concurrent-chain
-    # core (base/ is the conversation sidecar the query path labels doc
-    # ids from in-kernel); only the weights artifact is sharded-specific
-    idx, base = _finalize_artifacts(
-        spark, index_root, scheme=scheme, norm=norm,
-        min_df=min_df, max_df=max_df,
-    )
-    cmap = spark.read.parquet(os.path.join(index_root, "conv_parts"))
-
-    w = (
-        idx.weights.join(F.broadcast(base), "conv_id")
-        .join(F.broadcast(cmap), "conv_id")
-        .select(
-            "partition_id",
-            "term_id",
-            (F.col("base") + F.col("turn_idx")).cast("long").alias("doc_id"),
-            "weight",
-        )
-    )
-    # partition-LOCAL Tungsten sort (no shuffle): the block encoder wants
-    # (term_id, doc_id) order, and sorting here (JVM, scales with tasks)
-    # beats a numpy lexsort in every encode kernel (memory-bus-contended
-    # when many kernels run); sorted term_id also RLEs well in parquet.
-    # One READ TASK per postings file for this job: the default 128MB
-    # split would break a shard across two tasks → two sorted-but-
-    # overlapping weights files → the encoder's presort fast path can't
-    # engage. (At cluster scale: write the weights as one file per
-    # shard via the table format's file-size target instead.)
-    w = w.sortWithinPartitions("partition_id", "term_id", "doc_id")
-    conf = spark.conf
-    prev = conf.get("spark.sql.files.maxPartitionBytes")
-    conf.set("spark.sql.files.maxPartitionBytes", str(4 << 30))
-    try:
-        w.write.partitionBy("partition_id").mode("overwrite").parquet(
-            os.path.join(index_root, "weights")
-        )
-    finally:
-        conf.set("spark.sql.files.maxPartitionBytes", prev)
-    return idx, base
-
-
-def finalize_index(
-    spark: SparkSession,
-    index_root: str,
-    scheme: str = "BM25",
-    norm: int = 0,
-    min_df: int = 1,
-    max_df: int | None = None,
-):
-    """Derived phase: dictionary + corpus stats + weighted postings from
-    the checkpointed raw postings (cheap relative to tokenize; reruns
-    wholesale on resume). Returns an InvertedIndex and pins stats.json.
-    """
-    from .build import InvertedIndex
-    from .dictionary import build_dictionary, corpus_stats
-    from .weights import set_feature_values
-
-    # raw postings feed three consumers (dictionary agg, doc lengths,
-    # weighting join); deliberately NOT cached — page-cached parquet
-    # re-reads are cheaper and scale better than JVM cache
-    # materialization (measured: ~25% faster at 8 and 32 cores)
-    raw = load_postings(spark, index_root).drop("partition_id")
-    pruning = min_df > 1 or max_df is not None
-    if not pruning:
-        # dictionary aggregation and the doc-length/corpus-stat chain
-        # are independent subgraphs — materialize them as CONCURRENT
-        # Spark jobs so neither chain's driver barriers idle the cores
-        terms = build_dictionary(raw, min_df=min_df, max_df=max_df).cache()
-        doc_lens = (
-            raw.filter(F.col("is_doc_head") == 1)
-            .select("conv_id", "turn_idx", "doc_len")
-            .cache()
-        )
-        stats_box: dict = {}
-
-        def _stats():
-            stats_box["ns"] = corpus_stats(doc_lens)
-
-        _parallel_jobs(terms.count, _stats)
-        n_docs, avg_doc_len = stats_box["ns"]
-        _atomic_write_json(
-            os.path.join(index_root, "stats.json"),
-            {"n_docs": n_docs, "avg_doc_len": avg_doc_len,
-             "scheme": scheme, "norm": norm},
-        )
-        weights = set_feature_values(
-            raw, terms, n_docs, avg_doc_len, scheme=scheme, norm=norm
-        )
-        return InvertedIndex(
-            terms=terms, weights=weights, doc_lens=doc_lens,
-            n_docs=n_docs, avg_doc_len=avg_doc_len,
-            ngrams=1, scheme=scheme, norm=norm,
-        )
-    # pruning path: the doc projection depends on the pruned dictionary,
-    # so the chains are sequential by data dependency
-    terms = build_dictionary(raw, min_df=min_df, max_df=max_df).cache()
-    # re-project doc vectors onto the pruned dictionary: doc_len,
-    # n_docs and avg_doc_len must reflect retained terms only —
-    # identical semantics to build_index's pruning branch (the
-    # reference's pass-2 with frozen CV, SURVEY §3.2)
-    kept = raw.drop("doc_len").join(
-        F.broadcast(terms.select("term")), "term", "left_semi"
-    )
-    doc_lens = kept.groupBy("conv_id", "turn_idx").agg(
-        F.sum("tf").alias("doc_len")
-    ).cache()
-    raw = kept.join(doc_lens, ["conv_id", "turn_idx"])
-    n_docs, avg_doc_len = corpus_stats(doc_lens)
-    _atomic_write_json(
-        os.path.join(index_root, "stats.json"),
-        {"n_docs": n_docs, "avg_doc_len": avg_doc_len, "scheme": scheme, "norm": norm},
-    )
-    weights = set_feature_values(raw, terms, n_docs, avg_doc_len, scheme=scheme, norm=norm)
-    return InvertedIndex(
-        terms=terms, weights=weights, doc_lens=doc_lens,
-        n_docs=n_docs, avg_doc_len=avg_doc_len,
-        ngrams=1, scheme=scheme, norm=norm,
-    )

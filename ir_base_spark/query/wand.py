@@ -145,8 +145,9 @@ def wand_topk_sharded(
     query_terms: DataFrame,
     algo: str = "auto",
 ) -> DataFrame:
-    """Top-k over the doc-sharded on-disk block index (blocks.encode_shards
-    layout) — the production batch and interactive query path.
+    """Top-k over the doc-sharded on-disk block index
+    (blocks.encode_shards_from_postings layout) — the production batch
+    and interactive query path.
 
     Each task gets a slice of shard PATHS; the kernel reads only the
     matched terms' blocks via a pyarrow ``term_id in (...)`` predicate
@@ -159,6 +160,9 @@ def wand_topk_sharded(
     conversation-base sidecar (doc_id = base[conv] + turn by
     construction), so no join against the turn-level docs table runs per
     batch. The final merge is just the bounded per-query rank window.
+
+    Every non-empty shard must be in the TF-payload format
+    (``sg_payload=tfv1``); any other raises BlockFormatError.
 
     ``algo`` accepts only ``"auto"``: there is one scoring kernel.
     """
@@ -173,10 +177,8 @@ def wand_topk_sharded(
         )
     if not _os.path.isdir(_os.path.join(index_root, "base")):
         raise FileNotFoundError(
-            f"{index_root}/base/ sidecar missing — this index was "
-            "finalized before the in-kernel labeling change. Re-run "
-            "finalize_sharded (or finalize_index) to write the "
-            "conversation-base sidecar."
+            f"{index_root}/base/ sidecar missing — run finalize_lite "
+            "to write the conversation-base sidecar."
         )
     terms = spark.read.parquet(_os.path.join(index_root, "terms"))
     queries, term_ids = _prepare_queries(terms, query_terms)
@@ -189,16 +191,9 @@ def wand_topk_sharded(
         _glob.glob(_os.path.join(index_root, "blocks", "partition_id=*", "*.parquet"))
     )
     if not shard_files:
-        legacy = _glob.glob(_os.path.join(index_root, "blocks", "*.parquet"))
-        hint = (
-            " (found a legacy flat blocks/ layout — rebuild the index with "
-            "encode_shards / encode_shards_from_postings)"
-            if legacy
-            else ""
-        )
         raise FileNotFoundError(
             f"no sharded block files under {index_root}/blocks/"
-            f"partition_id=*/{hint}"
+            "partition_id=*/ — run encode_shards_from_postings"
         )
     # fuse shard files into ~2 tasks per core: one task per FILE pays
     # the python-worker round trip per shard (measured ~0.15s each — at
@@ -230,6 +225,7 @@ def wand_topk_sharded(
         from ..index.blocks import (
             _PAYLOAD_KEY,
             _PAYLOAD_TF,
+            BlockFormatError,
             load_query_sidecar_views,
             load_shard_doclen,
         )
@@ -243,6 +239,15 @@ def wand_topk_sharded(
                     filters=[("term_id", "in", tid_list)],
                     use_threads=False,
                 )
+                md = tbl.schema.metadata or {}
+                if md.get(_PAYLOAD_KEY) != _PAYLOAD_TF and (
+                    tbl.num_rows or pq.read_metadata(path).num_rows
+                ):
+                    raise BlockFormatError(
+                        f"{path} is not a TF-payload block shard "
+                        "(sg_payload=tfv1); rebuild the index with "
+                        "encode_shards_from_postings"
+                    )
                 if tbl.num_rows == 0:
                     continue
                 if views is None:
@@ -251,29 +256,25 @@ def wand_topk_sharded(
                     # per batch, growing with worker count)
                     views = load_query_sidecar_views(index_root)
                 conv_map, idf_lut, stats = views
-                md = tbl.schema.metadata or {}
-                if md.get(_PAYLOAD_KEY) == _PAYLOAD_TF:
-                    # TF-payload shard: reconstructable exact BM25 —
-                    # per-shard denominator from the doclen sidecar,
-                    # idf per matched term from the dictionary sidecar
-                    lo_v, dl = load_shard_doclen(_os.path.dirname(path))
-                    avg = float(stats["avg_doc_len"])
-                    denom = _K1 * ((1.0 - _B) + _B * (dl.astype(np.float64) / avg))
-                    tids_sorted, idf_sorted = idf_lut
+                # exact BM25 rebuilt from TF: per-shard denominator and
+                # norm from the doclen sidecar, idf per matched term
+                # from the dictionary sidecar
+                lo_v, dl, nrm = load_shard_doclen(_os.path.dirname(path))
+                avg = float(stats["avg_doc_len"])
+                denom = _K1 * ((1.0 - _B) + _B * (dl.astype(np.float64) / avg))
+                tids_sorted, idf_sorted = idf_lut
 
-                    def meta_for(tid, _d=denom, _l=lo_v):
-                        j = int(np.searchsorted(tids_sorted, tid))
-                        if j >= len(tids_sorted) or tids_sorted[j] != tid:
-                            raise RuntimeError(
-                                f"term_id {tid} present in blocks but "
-                                f"missing from the terms sidecar — "
-                                f"stale or mismatched index sidecars "
-                                f"under {index_root!r}"
-                            )
-                        return (float(idf_sorted[j]), _d, _l)
+                def meta_for(tid, _d=denom, _l=lo_v, _n=nrm):
+                    j = int(np.searchsorted(tids_sorted, tid))
+                    if j >= len(tids_sorted) or tids_sorted[j] != tid:
+                        raise RuntimeError(
+                            f"term_id {tid} present in blocks but "
+                            f"missing from the terms sidecar — "
+                            f"stale or mismatched index sidecars "
+                            f"under {index_root!r}"
+                        )
+                    return (float(idf_sorted[j]), _d, _l, _n)
 
-                else:
-                    meta_for = None
                 out = bucket_kernel(tbl.to_pandas(), meta_for)
                 if len(out) == 0:
                     continue

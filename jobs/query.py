@@ -2,11 +2,13 @@
 
     spark-submit --py-files ir_base_spark.zip jobs/query.py \
         --index-root /path/to/index \
-        --queries /path/to/queries.parquet \
-        [--engine wand|dataframe] [--output /path/out.parquet]
+        --queries /path/to/queries.parquet [--output /path/out.parquet]
 
 queries.parquet columns: query_id string, query_text string, k int
 (FIXTURES.md §2). Results: (query_id, rank, conv_id, turn_idx, score).
+Read-only on the index: queries are analyzed with the analyzer and
+n-gram order the index was built with (manifest/build_params.json) and
+scored over the on-disk block shards (wand_topk_sharded).
 """
 
 from __future__ import annotations
@@ -44,8 +46,6 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--index-root", required=True)
     ap.add_argument("--queries", required=True)
-    ap.add_argument("--engine", default="wand", choices=["wand", "dataframe"])
-    ap.add_argument("--analyzer", default="reference", choices=["reference", "simple"])
     ap.add_argument("--output", default=None)
     args = ap.parse_args()
 
@@ -54,29 +54,21 @@ def main() -> None:
     spark = SparkSession.builder.appName("ir-base-spark-query").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    from ir_base_spark.query.dataframe_bm25 import analyze_query_terms, topk_search
+    from ir_base_spark.query.dataframe_bm25 import analyze_query_terms
     from ir_base_spark.query.wand import wand_topk_sharded
 
     root = args.index_root
-    with open(os.path.join(root, "stats.json")) as fh:
-        stats = json.load(fh)
+    with open(os.path.join(root, "manifest", "build_params.json")) as fh:
+        params = json.load(fh)
 
     qpdf = enforce_query_cap(spark.read.parquet(args.queries), args.queries)
-    qt = analyze_query_terms(spark, qpdf, analyzer=args.analyzer)
+    qt = analyze_query_terms(
+        spark, qpdf, ngrams=params["ngrams"], analyzer=params["analyzer"]
+    )
 
     t0 = time.time()
-    if args.engine == "wand":
-        # doc-sharded on-disk block layout (blocks.encode_shards): the
-        # kernel pulls only matched-term row groups per shard
-        out = wand_topk_sharded(spark, root, qt)
-    else:
-        from ir_base_spark.index.manifest import finalize_index
-
-        idx = finalize_index(
-            spark, root, scheme=stats.get("scheme", "BM25"),
-            norm=stats.get("norm", 0),
-        )
-        out = topk_search(idx, qt)
+    # the kernel pulls only matched-term row groups per shard
+    out = wand_topk_sharded(spark, root, qt)
 
     if args.output:
         out.write.mode("overwrite").parquet(args.output)
@@ -86,7 +78,6 @@ def main() -> None:
     print(
         json.dumps(
             {
-                "engine": args.engine,
                 "queries": len(qpdf),
                 "result_rows": n,
                 "query_sec": round(time.time() - t0, 3),

@@ -97,7 +97,7 @@ def test_tf_payload_multibyte_roundtrip():
     got_ws = []
     for r in enc.to_pylist():
         ids, ws = decode_postings_block(
-            r["first_doc"], r["doc_gaps"], r["weights"], (idf_t, denom, 0)
+            r["first_doc"], r["doc_gaps"], r["weights"], (idf_t, denom, 0, None)
         )
         got_ids.append(ids)
         got_ws.append(ws)
@@ -109,11 +109,12 @@ def test_tf_payload_multibyte_roundtrip():
 
 def test_decode_postings_run_bit_exact():
     """Whole-run vectorized decode == per-block decode, bit-exact, for
-    both payload formats (float64 and TF+sidecar reconstruction),
-    including multibyte gaps and tfs."""
+    both payload formats (in-memory float64 and on-disk TF+sidecar
+    reconstruction), including multibyte gaps and tfs."""
     import numpy as np
 
     from ir_base_spark.index.blocks import (
+        _encode_sorted_run,
         _encode_sorted_run_arrow,
         decode_postings_block,
         decode_postings_run,
@@ -132,11 +133,13 @@ def test_decode_postings_run_bit_exact():
     w = idf_t * (tf.astype(np.float64) * (K1 + 1.0) / (denom[doc] + tf))
 
     for use_tf in (True, False):
-        enc = _encode_sorted_run_arrow(
-            tid, 0, doc, w, 64, tf=tf if use_tf else None
-        )
-        rows = enc.to_pylist()
-        meta = (idf_t, denom, 0) if use_tf else None
+        if use_tf:
+            rows = _encode_sorted_run_arrow(tid, 0, doc, w, 64, tf).to_pylist()
+        else:
+            rows = _encode_sorted_run(
+                tid, np.zeros(n, dtype=np.int64), doc, w, 64
+            ).to_dict("records")
+        meta = (idf_t, denom, 0, None) if use_tf else None
         per_block = [
             decode_postings_block(
                 r["first_doc"], r["doc_gaps"], r["weights"], meta

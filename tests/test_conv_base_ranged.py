@@ -1,7 +1,8 @@
 """conv_doc_base_with_stats_ranged: the shuffle-sample-free,
 checkpoint-free base cumsum that rides the build's conv-range
 partitioning (conv_partition_map contract). Must be value-identical to
-the generic two-phase-cumsum version on the same doc_lens."""
+the generic sampled two-phase cumsum (conv_doc_base) and the direct
+aggregate (corpus_stats) on the same doc_lens."""
 
 from __future__ import annotations
 
@@ -13,8 +14,9 @@ from ir_base_spark.index.manifest import (
     resumable_build,
 )
 from ir_base_spark.index.dictionary import (
-    conv_doc_base_with_stats,
+    conv_doc_base,
     conv_doc_base_with_stats_ranged,
+    corpus_stats,
 )
 
 
@@ -35,9 +37,8 @@ def test_ranged_base_matches_generic(spark, fixture_small, tmp_path):
     base_r, n_docs_r, avg_r, release = conv_doc_base_with_stats_ranged(
         doc_lens
     )
-    base_g, n_docs_g, avg_g = conv_doc_base_with_stats(
-        doc_lens.drop("partition_id")
-    )
+    base_g = conv_doc_base(doc_lens.drop("partition_id"))
+    n_docs_g, avg_g = corpus_stats(doc_lens.drop("partition_id"))
 
     assert n_docs_r == n_docs_g
     assert avg_r == avg_g  # integer-exact sums -> bit-identical avg

@@ -6,10 +6,13 @@ import os
 import shutil
 
 from ir_base_spark.index.manifest import (
-    finalize_index,
+    finalize_lite,
     read_manifest,
     resumable_build,
 )
+from ir_base_spark.oracle import build_oracle_index, search_all
+from ir_base_spark.query.dataframe_bm25 import analyze_query_terms
+from tests.test_rank_identity import _compare, _oracle_docs
 
 
 def _file_states(root: str) -> dict[str, tuple[float, int]]:
@@ -99,8 +102,8 @@ def test_resumed_index_identical_to_fresh(spark, fixture_small, tmp_path):
         shutil.rmtree(os.path.join(root_b, "postings", f"partition_id={pid}"))
     resumable_build(spark, t, root_b, num_partitions=P)
 
-    ia = finalize_index(spark, root_a)
-    ib = finalize_index(spark, root_b)
+    ia, _ = finalize_lite(spark, root_a)
+    ib, _ = finalize_lite(spark, root_b)
     assert ia.n_docs == ib.n_docs
     assert ia.avg_doc_len == ib.avg_doc_len
     ta = {tuple(r) for r in ia.terms.collect()}
@@ -109,18 +112,23 @@ def test_resumed_index_identical_to_fresh(spark, fixture_small, tmp_path):
     wa = {tuple(r) for r in ia.weights.collect()}
     wb = {tuple(r) for r in ib.weights.collect()}
     assert wa == wb
+    ia.terms.unpersist()
+    ib.terms.unpersist()
 
 
 def test_finalize_pruning_identity(spark, fixture_small, tmp_path):
-    """finalize_index(min_df/max_df) must re-project doc stats onto the
-    pruned dictionary exactly like build_index's pruning branch."""
+    """finalize_lite(min_df/max_df) must re-project doc stats onto the
+    pruned dictionary exactly like build_index's pruning branch, and
+    the encoded shards must be rank-identical to the pruned oracle."""
+    from ir_base_spark.index.blocks import encode_shards_from_postings
     from ir_base_spark.index.build import build_index
+    from ir_base_spark.query.wand import wand_topk_sharded
 
     t = spark.createDataFrame(fixture_small.transcripts)
     root = str(tmp_path / "idx")
     resumable_build(spark, t, root, num_partitions=4)
 
-    fin = finalize_index(spark, root, min_df=3, max_df=500)
+    fin, _base = finalize_lite(spark, root, min_df=3, max_df=500)
     ref = build_index(spark, t, min_df=3, max_df=500)
 
     assert fin.n_docs == ref.n_docs
@@ -131,3 +139,15 @@ def test_finalize_pruning_identity(spark, fixture_small, tmp_path):
     wa = {(r[0], r[1], r[2], round(r[3], 12)) for r in fin.weights.collect()}
     wb = {(r[0], r[1], r[2], round(r[3], 12)) for r in ref.weights.collect()}
     assert wa == wb
+
+    encode_shards_from_postings(spark, root, block_size=16)
+    q = fixture_small.queries
+    oracle_idx = build_oracle_index(
+        _oracle_docs(fixture_small.transcripts), min_df=3, max_df=500
+    )
+    expected = search_all(
+        oracle_idx, list(zip(q["query_id"], q["query_text"], q["k"]))
+    )
+    got = wand_topk_sharded(spark, root, analyze_query_terms(spark, q)).collect()
+    _compare(got, expected)
+    fin.terms.unpersist()

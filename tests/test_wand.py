@@ -60,112 +60,25 @@ def test_wand_matches_m1_bitwise(spark, fixture_small):
         assert abs(m1[key][2] - wd[key][2]) < 1e-12
 
 
-def test_sharded_pipeline_rank_identity(spark, fixture_small, tmp_path):
-    """Full production path: resumable build → sharded finalize (zero
-    posting shuffle) → per-shard pyarrow block encode → sharded WAND.
-    Must be rank-identical to the single-node oracle."""
-    from ir_base_spark.index.blocks import encode_shards
-    from ir_base_spark.index.manifest import finalize_sharded, resumable_build
-    from ir_base_spark.query.wand import wand_topk_sharded
+def _disk_index(spark, transcripts, root, num_partitions, **finalize_args):
+    """The on-disk path: resumable_build → finalize_lite →
+    encode_shards_from_postings (small blocks force multi-block runs)."""
+    from ir_base_spark.index.blocks import encode_shards_from_postings
+    from ir_base_spark.index.manifest import finalize_lite, resumable_build
 
-    t = fixture_small.transcripts
-    q = fixture_small.queries
-    oracle_idx = build_oracle_index(_oracle_docs(t))
-    expected = search_all(
-        oracle_idx, list(zip(q["query_id"], q["query_text"], q["k"]))
+    resumable_build(
+        spark, spark.createDataFrame(transcripts), root,
+        num_partitions=num_partitions,
     )
-
-    root = str(tmp_path / "sharded")
-    sdf = spark.createDataFrame(t)
-    resumable_build(spark, sdf, root, num_partitions=8)
-    idx, base = finalize_sharded(spark, root)
-    rep = encode_shards(spark, root, block_size=16)
-    assert rep["shards"] >= 1 and rep["blocks"] > 0
-    # doc-id ranges must never overlap (two_phase_cumsum offset pin)
-    docs = spark.read.parquet(root + "/docs")
-    assert docs.count() == docs.select("doc_id").distinct().count()
-
-    qt = analyze_query_terms(spark, q)
-    got = wand_topk_sharded(spark, root, qt).collect()
-    _compare(got, expected)
+    idx, _base = finalize_lite(spark, root, **finalize_args)
+    rep = encode_shards_from_postings(spark, root, block_size=16)
+    return idx, rep
 
 
-def test_sharded_batch_and_single_query_match_oracle(spark, fixture_small, tmp_path):
-    """The one scoring kernel is rank-identical to the oracle for a
-    batch and for a single interactive request; the removed kernels'
-    ``algo`` values are refused."""
-    from ir_base_spark.index.blocks import encode_shards
-    from ir_base_spark.index.manifest import finalize_sharded, resumable_build
-    from ir_base_spark.query.wand import wand_topk_sharded
-
-    t = fixture_small.transcripts
-    q = fixture_small.queries
-    assert len(q) >= 16
-    oracle_idx = build_oracle_index(_oracle_docs(t))
-    root = str(tmp_path / "taat")
-    resumable_build(spark, spark.createDataFrame(t), root, num_partitions=4)
-    finalize_sharded(spark, root)
-    encode_shards(spark, root, block_size=16)
-
-    for batch in (q, q.head(1)):
-        expected = search_all(
-            oracle_idx, list(zip(batch["query_id"], batch["query_text"], batch["k"]))
-        )
-        qt = analyze_query_terms(spark, batch)
-        _compare(wand_topk_sharded(spark, root, qt).collect(), expected)
-
-    for algo in ("wand", "taat", "maxscore", "cursor"):
-        with pytest.raises(ValueError, match="removed"):
-            wand_topk_sharded(spark, root, qt, algo=algo)
-
-
-def test_direct_postings_blocks_identical(spark, fixture_small, tmp_path):
-    """encode_shards_from_postings (no weights artifact) must produce a
-    block index rank-identical to the oracle AND byte-identical block
-    payloads vs the finalize_sharded+encode_shards path."""
-    from ir_base_spark.index.blocks import (
-        encode_shards,
-        encode_shards_from_postings,
-    )
-    from ir_base_spark.index.manifest import (
-        finalize_lite,
-        finalize_sharded,
-        resumable_build,
-    )
-    from ir_base_spark.query.wand import wand_topk_sharded
-
-    t = fixture_small.transcripts
-    q = fixture_small.queries
-    oracle_idx = build_oracle_index(_oracle_docs(t))
-    expected = search_all(
-        oracle_idx, list(zip(q["query_id"], q["query_text"], q["k"]))
-    )
-    sdf = spark.createDataFrame(t)
-
-    root_a = str(tmp_path / "via_weights")
-    resumable_build(spark, sdf, root_a, num_partitions=4)
-    finalize_sharded(spark, root_a)
-    encode_shards(spark, root_a, block_size=16)
-
-    root_b = str(tmp_path / "direct")
-    resumable_build(spark, sdf, root_b, num_partitions=4)
-    finalize_lite(spark, root_b)
-    encode_shards_from_postings(spark, root_b, block_size=16)
-
-    cols = ["term_id", "bucket", "block_seq", "n", "first_doc", "last_doc",
-            "doc_gaps"]
-    ba = sorted(
-        (tuple(r) for r in spark.read.parquet(root_a + "/blocks")
-         .select(*cols).collect())
-    )
-    bb = sorted(
-        (tuple(r) for r in spark.read.parquet(root_b + "/blocks")
-         .select(*cols).collect())
-    )
-    assert ba == bb  # identical structure + byte-identical gap payloads
-    # the direct path stores varbyte TF and reconstructs the exact BM25
-    # double at decode (sg_payload=tfv1); decoded weights must agree with
-    # the stored-float64 path to the last ulp of Math.log vs numpy log
+def _assert_decoded_weights_match(spark, root, idx):
+    """Every posting's weight decoded from the TF-payload blocks equals
+    the Catalyst set_feature_values weight (idx.weights, doc_id via
+    base/) within 1e-12, and the posting sets are equal."""
     import os
 
     import numpy as np
@@ -177,33 +90,145 @@ def test_direct_postings_blocks_identical(spark, fixture_small, tmp_path):
     )
     from ir_base_spark.index.weights import B, K1
 
-    (_ts, t_ids, _td, _cs, _bs, stats, t_idf) = _load_sidecars(root_b)
-    order = np.argsort(t_ids)
-    tids_s, idf_s = t_ids[order], t_idf[order]
+    base = {r["conv_id"]: r["base"]
+            for r in spark.read.parquet(root + "/base").collect()}
+    want = {(r["term_id"], base[r["conv_id"]] + r["turn_idx"]): r["weight"]
+            for r in idx.weights.collect()}
+    (_ts, t_ids, _td, _cs, _bs, stats, t_idf) = _load_sidecars(root)
+    idf = dict(zip(t_ids.tolist(), t_idf.tolist()))
     avg = float(stats["avg_doc_len"])
-    wa = {(r["term_id"], r["bucket"], r["block_seq"]): r["weights"]
-          for r in spark.read.parquet(root_a + "/blocks").collect()}
-    denoms: dict[int, tuple] = {}
-    n_checked = 0
-    for r in spark.read.parquet(root_b + "/blocks").collect():
+    shards: dict[int, tuple] = {}
+    got = {}
+    for r in spark.read.parquet(root + "/blocks").collect():
         pid = int(r["partition_id"])
-        if pid not in denoms:
-            lo, dl = load_shard_doclen(
-                os.path.join(root_b, "blocks", f"partition_id={pid}")
+        if pid not in shards:
+            lo, dl, nrm = load_shard_doclen(
+                os.path.join(root, "blocks", f"partition_id={pid}")
             )
-            denoms[pid] = (lo, K1 * ((1.0 - B) + B * (dl.astype(np.float64) / avg)))
-        lo, denom = denoms[pid]
-        idf_t = float(idf_s[int(np.searchsorted(tids_s, r["term_id"]))])
-        _ids, vb = decode_postings_block(
-            r["first_doc"], r["doc_gaps"], r["weights"], (idf_t, denom, lo)
+            denom = K1 * ((1.0 - B) + B * (dl.astype(np.float64) / avg))
+            shards[pid] = (denom, lo, nrm)
+        ids, ws = decode_postings_block(
+            r["first_doc"], r["doc_gaps"], r["weights"],
+            (idf[r["term_id"]], *shards[pid]),
         )
-        va = np.frombuffer(
-            wa[(r["term_id"], r["bucket"], r["block_seq"])], dtype=np.float64
-        )
-        assert np.abs(va - vb).max(initial=0.0) < 1e-12, r["term_id"]
-        n_checked += 1
-    assert n_checked == len(wa)
+        for d, w in zip(ids.tolist(), ws.tolist()):
+            got[(r["term_id"], d)] = w
+    assert got.keys() == want.keys()
+    err = max(abs(got[k] - want[k]) for k in want)
+    assert err < 1e-12, err
+
+
+@pytest.mark.parametrize("norm", [0, 1, 2])
+def test_sharded_pipeline_rank_identity(spark, fixture_small, tmp_path, norm):
+    """Full production path: resumable build → finalize_lite →
+    per-shard pyarrow block encode (TF payload, per-doc norm in the
+    doclen sidecar) → sharded top-k. Must be rank-identical to the
+    single-node oracle for every norm."""
+    from ir_base_spark.query.wand import wand_topk_sharded
+
+    t = fixture_small.transcripts
+    q = fixture_small.queries
+    oracle_idx = build_oracle_index(_oracle_docs(t), norm=norm)
+    expected = search_all(
+        oracle_idx, list(zip(q["query_id"], q["query_text"], q["k"]))
+    )
+
+    root = str(tmp_path / "sharded")
+    idx, rep = _disk_index(spark, t, root, 8, norm=norm)
+    assert rep["shards"] >= 1 and rep["blocks"] > 0
+    # doc-id ranges must never overlap (two_phase_cumsum offset pin)
+    docs = spark.read.parquet(root + "/docs")
+    assert docs.count() == docs.select("doc_id").distinct().count()
+    _assert_decoded_weights_match(spark, root, idx)
 
     qt = analyze_query_terms(spark, q)
-    got = wand_topk_sharded(spark, root_b, qt).collect()
+    got = wand_topk_sharded(spark, root, qt).collect()
     _compare(got, expected)
+    idx.terms.unpersist()
+
+
+def test_sharded_batch_and_single_query_match_oracle(spark, fixture_small, tmp_path):
+    """The one scoring kernel is rank-identical to the oracle for a
+    batch and for a single interactive request; the removed kernels'
+    ``algo`` values are refused."""
+    from ir_base_spark.query.wand import wand_topk_sharded
+
+    t = fixture_small.transcripts
+    q = fixture_small.queries
+    assert len(q) >= 16
+    oracle_idx = build_oracle_index(_oracle_docs(t))
+    root = str(tmp_path / "taat")
+    idx, _rep = _disk_index(spark, t, root, 4)
+
+    for batch in (q, q.head(1)):
+        expected = search_all(
+            oracle_idx, list(zip(batch["query_id"], batch["query_text"], batch["k"]))
+        )
+        qt = analyze_query_terms(spark, batch)
+        _compare(wand_topk_sharded(spark, root, qt).collect(), expected)
+
+    for algo in ("wand", "taat", "maxscore", "cursor"):
+        with pytest.raises(ValueError, match="removed"):
+            wand_topk_sharded(spark, root, qt, algo=algo)
+    idx.terms.unpersist()
+
+
+def test_direct_postings_blocks_identical(spark, fixture_small, tmp_path):
+    """encode_shards_from_postings (no weights artifact): the weight
+    decoded from the TF payload of every posting equals Catalyst
+    set_feature_values, and the index is rank-identical to the oracle."""
+    from ir_base_spark.query.wand import wand_topk_sharded
+
+    t = fixture_small.transcripts
+    q = fixture_small.queries
+    oracle_idx = build_oracle_index(_oracle_docs(t))
+    expected = search_all(
+        oracle_idx, list(zip(q["query_id"], q["query_text"], q["k"]))
+    )
+    root = str(tmp_path / "direct")
+    idx, _rep = _disk_index(spark, t, root, 4)
+    _assert_decoded_weights_match(spark, root, idx)
+
+    qt = analyze_query_terms(spark, q)
+    got = wand_topk_sharded(spark, root, qt).collect()
+    _compare(got, expected)
+    idx.terms.unpersist()
+
+
+def test_sharded_query_rejects_non_tf_payload_shard(spark, fixture_small, tmp_path):
+    """An empty shard file is legal; a non-empty shard without the
+    sg_payload=tfv1 stamp fails with BlockFormatError, never a wrong
+    top-k."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    from ir_base_spark.index.blocks import _blocks_arrow_schema
+    from ir_base_spark.query.wand import wand_topk_sharded
+
+    t = fixture_small.transcripts
+    q = fixture_small.queries
+    oracle_idx = build_oracle_index(_oracle_docs(t))
+    expected = search_all(
+        oracle_idx, list(zip(q["query_id"], q["query_text"], q["k"]))
+    )
+    root = str(tmp_path / "fmt")
+    idx, _rep = _disk_index(spark, t, root, 2)
+    qt = analyze_query_terms(spark, q)
+
+    empty_dir = os.path.join(root, "blocks", "partition_id=99")
+    os.makedirs(empty_dir)
+    pq.write_table(
+        _blocks_arrow_schema().empty_table(),
+        os.path.join(empty_dir, "blocks.parquet"),
+    )
+    _compare(wand_topk_sharded(spark, root, qt).collect(), expected)
+
+    path = sorted(glob.glob(os.path.join(root, "blocks", "partition_id=0", "*.parquet")))[0]
+    tbl = pq.read_table(path)
+    assert tbl.num_rows and tbl.schema.metadata[b"sg_payload"] == b"tfv1"
+    pq.write_table(tbl.replace_schema_metadata(None), path)
+    with pytest.raises(Exception, match="BlockFormatError"):
+        wand_topk_sharded(spark, root, qt).collect()
+    idx.terms.unpersist()
